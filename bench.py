@@ -118,10 +118,11 @@ def _update_floors(updates: dict, quiet_best: dict | None = None) -> None:
     (< 0.85x the standing record) confirms it, committing the SLOWER of
     the two reads — the level both runs demonstrably hit, not the single
     best flash. A pending is DISCARDED only on contrary quiet evidence —
-    a probe-quiet best for that leg slower than pending × the loaded
-    tolerance (the regime didn't reproduce) — and survives runs where
-    the leg never saw a quiet window (co-tenant weather is not evidence
-    against; ``quiet_best`` carries each leg's best probe-quiet read).
+    a probe-quiet best (or a normal ratchet) for that leg slower than
+    pending × the loaded tolerance (the regime didn't reproduce) — and
+    survives runs where the leg never saw a quiet window (co-tenant
+    weather is not evidence against; ``quiet_best`` carries each leg's
+    best probe-quiet read).
     """
     try:
         with open(_FLOORS_PATH) as f:
@@ -136,7 +137,9 @@ def _update_floors(updates: dict, quiet_best: dict | None = None) -> None:
         changed = True
         if cur is None or v >= 0.85 * cur:
             fl[k] = round(min(cur, v) if cur is not None else v, 3)
-            pend.pop(k, None)
+            if k in pend and v > float(pend[k]) * _FLOOR_TOL:
+                # a quiet read far off the pending regime contradicts it
+                pend.pop(k)
         elif k in pend:
             fl[k] = round(min(cur, max(v, float(pend.pop(k)))), 3)
         else:
@@ -598,6 +601,7 @@ def _pipeline_section(spark, cores: int, sf_dir: str, q: dict, meta: dict) -> No
             "mode": m.mode,
             "active_vertices": m.active_vertices,
             "processed_edges": m.processed_edges,
+            "route": m.route,
         }
         for m in cell["lp_eng"].metrics
     ]
@@ -613,6 +617,7 @@ def _pipeline_section(spark, cores: int, sf_dir: str, q: dict, meta: dict) -> No
             "mode": m.mode,
             "active_vertices": m.active_vertices,
             "processed_edges": m.processed_edges,
+            "route": m.route,
         }
         for m in conv_eng.metrics
     ]

@@ -289,6 +289,7 @@ def bc_engine(
         dep[sel] += vals[sel_m]
         if on_state is not None:
             on_state("bwd", back, {"depth": depth, "sigma": sigma, "dep": dep})
+    eng_t.close()
     out = np.zeros(n, dtype=np.float64)
     out[reached] = (dep[reached] - inv[reached]) / inv[reached]
     return out, eng
@@ -532,6 +533,7 @@ def hits_engine(
         s = hub.sum()
         if s > 0:
             hub /= s
+    eng_t.close()
     return auth, hub, eng
 
 

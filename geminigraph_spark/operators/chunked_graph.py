@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import is_local_master
+
 _CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("chunk_id", T.IntegerType(), False),
@@ -310,6 +312,7 @@ class ChunkedGraph:
             not distributed_boundaries
             and n_vertices is not None
             and SINGLE_SCAN_MIN_V <= n_vertices <= BUILD_DENSE_V_MAX
+            and is_local_master(spark)
         ):
             # single-scan fast path (guide §8): ONE pass over the edges
             # writes dst-block bucket files AND the degree bincounts; the
@@ -324,7 +327,9 @@ class ChunkedGraph:
             # and |V| is large enough for the scan savings to beat the
             # partitioned write's per-file commit overhead yet small
             # enough for the dense per-task degree arrays
-            # (SINGLE_SCAN_MIN_V / BUILD_DENSE_V_MAX).
+            # (SINGLE_SCAN_MIN_V / BUILD_DENSE_V_MAX). The driver reads
+            # the executor-written bucket files back, so the path also
+            # needs a local master (one shared filesystem).
             return cls._build_single_scan(
                 spark, e, n_chunks, weighted, n_vertices, spill_dir, t0
             )

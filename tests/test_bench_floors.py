@@ -71,3 +71,27 @@ def test_new_leg_first_record_commits(benchmod):
     mod._update_floors({"newleg": 7.0})
     fl, pend = _state(p)
     assert fl["newleg"] == 7.0 and pend == {}
+
+
+def test_normal_ratchet_keeps_consistent_pending(benchmod):
+    """A normal ratchet inside pending × tolerance is not contrary
+    evidence: the pending survives and a later deep read confirms it
+    (the synth_hits10 4.96 record was once lost to an unconditional pop)."""
+    mod, p = benchmod
+    mod._FLOOR_TOL = 1.25
+    mod._update_floors({"leg": 15.0})  # 0.75x — parked
+    mod._update_floors({"leg": 18.0})  # normal ratchet, 18 <= 15 x 1.25
+    fl, pend = _state(p)
+    assert fl["leg"] == 18.0 and pend == {"leg": 15.0}
+    mod._update_floors({"leg": 14.0})  # second deep read confirms
+    fl, pend = _state(p)
+    assert fl["leg"] == 15.0 and pend == {}
+
+
+def test_normal_ratchet_far_off_pending_discards_it(benchmod):
+    mod, p = benchmod
+    mod._FLOOR_TOL = 1.25
+    mod._update_floors({"leg": 12.0})  # parked
+    mod._update_floors({"leg": 17.5})  # 17.5 > 12 x 1.25: contrary
+    fl, pend = _state(p)
+    assert fl["leg"] == 17.5 and pend == {}

@@ -707,3 +707,144 @@ def test_single_scan_build_matches_shuffle_build(spark, built):
     assert np.allclose(got_d, want_d, atol=0)
     g2.unpersist()
     wg2.unpersist()
+
+
+@pytest.fixture(scope="module")
+def derived(spark, built):
+    """The transpose and the simple symmetrized graph of the fixture."""
+    src, dst, w, n, g, sym, wg = built
+    df_t = spark.createDataFrame(
+        [(int(d), int(s)) for s, d in zip(src, dst)], "src long, dst long"
+    )
+    gt = ChunkedGraph.build(spark, df_t, n_chunks=5, n_vertices=n)
+    m = src != dst
+    pairs = np.unique(
+        np.stack([np.minimum(src[m], dst[m]), np.maximum(src[m], dst[m])], axis=1),
+        axis=0,
+    )
+    df_s = spark.createDataFrame(
+        [
+            (int(a), int(b))
+            for a, b in zip(
+                np.concatenate([pairs[:, 0], pairs[:, 1]]),
+                np.concatenate([pairs[:, 1], pairs[:, 0]]),
+            )
+        ],
+        "src long, dst long",
+    )
+    simple = ChunkedGraph.build(spark, df_s, n_chunks=5, n_vertices=n)
+    yield gt, simple
+    gt.unpersist()
+    simple.unpersist()
+
+
+def _run_kernel(name, built, derived):
+    """(outputs, engines) of one engine kernel on the fixture graphs."""
+    from geminigraph_spark.operators.algorithms import (
+        bc_engine,
+        coreness_engine,
+        hits_engine,
+    )
+
+    src, dst, w, n, g, sym, wg = built
+    gt, simple = derived
+    root = int(src[0])
+    seeds = np.zeros(n, dtype=bool)
+    seeds[::10] = True
+    if name == "hits":
+        auth, hub, eng = hits_engine(g, gt, iters=4)
+        return (auth, hub), eng
+    out, eng = {
+        "pagerank": lambda: pagerank_engine(g, iters=6),
+        "ppr": lambda: ppr_engine(g, seeds, iters=6),
+        "cc": lambda: cc_engine(sym),
+        "lp": lambda: lp_engine(sym, iters=6),
+        "sssp": lambda: sssp_engine(wg, root=root),
+        "bfs": lambda: bfs_engine(g, root=root),
+        "bc": lambda: bc_engine(g, gt, root=root),
+        "k_core": lambda: k_core_engine(simple, 4),
+        "coreness": lambda: coreness_engine(simple),
+    }[name]()
+    return (out,), eng
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    ["pagerank", "ppr", "cc", "lp", "sssp", "bfs", "bc", "k_core", "hits", "coreness"],
+)
+def test_driver_and_spark_routes_agree(kernel, built, derived, monkeypatch):
+    """The in-driver route runs the same superstep body as the Spark job
+    route: outputs are exactly equal, and so are every superstep's mode,
+    active edges and processed edges."""
+    from geminigraph_spark.operators import engine as E
+
+    res = {}
+    # -1 is below any superstep's work (a frontier with no out-edges has
+    # work 0), so every superstep takes the job route
+    for route, limit in (("spark", -1), ("driver", 1 << 62)):
+        monkeypatch.setattr(E, "DRIVER_MAX_WORK", limit)
+        out, eng = _run_kernel(kernel, built, derived)
+        assert {m.route for m in eng.metrics} == {route}
+        res[route] = (
+            out,
+            [(m.mode, m.active_edges, m.processed_edges) for m in eng.metrics],
+        )
+        eng.close()
+    (out_s, steps_s), (out_d, steps_d) = res["spark"], res["driver"]
+    for a, b in zip(out_s, out_d):
+        assert a.dtype == b.dtype and np.array_equal(a, b)
+    assert steps_s == steps_d
+
+
+def test_driver_route_needs_local_master_and_auto_transport(
+    built, monkeypatch, tmp_path
+):
+    """A non-local master never runs a superstep in the driver, nor does
+    an explicit transport; the route reaches metrics.parquet, and an
+    in-driver run makes no state directory."""
+    import pyarrow.parquet as pq
+
+    from geminigraph_spark.operators import engine as E
+    from geminigraph_spark.plans.checkpoint import SnapshotStore, write_metrics_parquet
+
+    src, dst, w, n, g, sym, wg = built
+    monkeypatch.setattr(E, "DRIVER_MAX_WORK", 1 << 62)
+    want, eng = pagerank_engine(g, iters=3)
+    assert [m.route for m in eng.metrics] == ["driver"] * 3
+    assert all(m.bytes_shipped == 0 for m in eng.metrics)
+    assert eng._state_dir is None  # nothing was written to ship
+    store = SnapshotStore(str(tmp_path), "run", "pagerank")
+    table = pq.read_table(write_metrics_parquet(store, eng.metrics))
+    assert table.column("route").to_pylist() == ["driver"] * 3
+    eng.close()
+
+    for transport in ("file", "bc"):
+        eng = VertexEngine(g, transport=transport)
+        eng.edge_aggregate(np.ones(n), "sum", iteration=0)
+        assert eng.metrics[-1].route == "spark"
+        eng.close()
+
+    monkeypatch.setattr(g.spark.sparkContext, "master", "spark://cluster:7077")
+    got, eng = pagerank_engine(g, iters=3)
+    assert eng.transport == "bc"
+    assert [m.route for m in eng.metrics] == ["spark"] * 3
+    assert np.array_equal(got, want)
+    eng.close()
+
+
+def test_single_scan_build_needs_local_master(spark, built, monkeypatch):
+    """The single-scan build reads executor-written bucket files on the
+    driver, so a non-local master takes the shuffle build at any |V|."""
+    from geminigraph_spark.operators import chunked_graph as CG
+
+    src, dst, w, n, g, sym, wg = built
+    df = spark.createDataFrame(
+        [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
+    )
+    monkeypatch.setattr(CG, "SINGLE_SCAN_MIN_V", 0)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    g2 = ChunkedGraph.build(spark, df, n_chunks=5, n_vertices=n)
+    assert not g2.build_meta.get("single_scan")
+    assert np.array_equal(g2.boundaries, g.boundaries)
+    assert np.array_equal(g2.in_degree, g.in_degree)
+    g2.unpersist()
