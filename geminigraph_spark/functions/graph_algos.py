@@ -20,6 +20,19 @@ plan (SURVEY.md §7 "hard parts" #1).
 
 A faster chunked-numpy engine path for the same kernels lives in
 ``operators/``; both are parity-tested against functions.oracle_numpy.
+
+Small cold calls run on that engine in the driver: ``pagerank``,
+``connected_components`` and ``label_propagation`` hand the call to
+``_on_driver`` when the master is local, the checkpoint hook is the
+default one, no ``start``/``prior_labels``/``new_edges`` is given, and
+the engine graph has at most ``engine.DRIVER_MAX_WORK`` edges. A Spark
+job per superstep costs far more than a small graph's numpy work, and
+such a call observes nothing between supersteps, so only its result
+(same schema, same labels, ranks within 1e-9) and its per-superstep
+``DFIterMetrics`` (``route="driver"``) are owed. A custom hook must see
+each superstep's frame and a resume or warm start begins from a
+caller's frame: those calls, cluster masters and larger graphs keep the
+DataFrame kernels below. ``triangle_count`` has no engine kernel.
 """
 
 from __future__ import annotations
@@ -29,8 +42,11 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 Checkpointer = Callable[[int, DataFrame], DataFrame]
 
@@ -132,12 +148,13 @@ def _small_graph_scope(
 
 @dataclass
 class DFIterMetrics:
-    """Per-superstep record for the frontier-restricted kernels."""
+    """Per-superstep record for the iterative kernels."""
 
     iteration: int
     mode: str  # "sparse" (broadcast frontier) | "dense" (shuffle join)
     active_vertices: int
     active_edges: int
+    route: str = "dataframe"  # "driver": an engine superstep in the driver
 
 
 def _default_ckpt(_i: int, df: DataFrame) -> DataFrame:
@@ -203,6 +220,80 @@ def _collapsed(edges: DataFrame) -> DataFrame:
     return edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def _sym_multiset(src: np.ndarray, dst: np.ndarray):
+    """symmetrize_df on dense-id arrays."""
+    return np.concatenate([src, dst]), np.concatenate([dst, src])
+
+
+def _sym_distinct(src: np.ndarray, dst: np.ndarray):
+    """symmetrize_df(...).distinct() on dense-id arrays."""
+    s, d = _sym_multiset(src, dst)
+    n = int(max(s.max(), d.max())) + 1
+    key = np.unique(s * n + d)
+    return key // n, key % n
+
+
+def _on_driver(edges, checkpoint, metrics, value, derive, run):
+    """The in-driver route of pagerank / connected_components /
+    label_propagation: the same recurrence on the chunked engine, whose
+    supersteps then all run in the driver process. Returns the result
+    frame, or None when the call stays on the DataFrame path.
+
+    Taken on a local master (``session.is_local_master``), for a call
+    with the default checkpoint hook, when the engine graph has at most
+    ``engine.DRIVER_MAX_WORK`` edges. The edges are collected through
+    Arrow with a bounded ``limit`` probe, so a larger input falls
+    through after one job. Ids map to dense ids in sorted order, which
+    keeps min-id labels and smallest-label tie breaks unchanged.
+    ``derive(src, dst)`` gives the engine graph's edges, ``run(graph)``
+    the kernel's (values, engine); label values are mapped back to ids."""
+    from ..operators import engine
+    from ..operators.chunked_graph import ChunkedGraph
+    from ..session import is_local_master
+
+    spark = edges.sparkSession
+    cap = engine.DRIVER_MAX_WORK
+    if checkpoint is not _default_ckpt or not is_local_master(spark):
+        return None
+    if any(edges.schema[c].dataType != T.LongType() for c in ("src", "dst")):
+        return None
+    t = edges.select("src", "dst").limit(cap + 1).toArrow()
+    if not 0 < t.num_rows <= cap or t["src"].null_count or t["dst"].null_count:
+        return None
+    m = t.num_rows
+    ids, dense = np.unique(
+        np.concatenate([t["src"].to_numpy(), t["dst"].to_numpy()]),
+        return_inverse=True,
+    )
+    src, dst = derive(dense[:m], dense[m:])
+    if len(src) > cap:
+        return None
+    g = ChunkedGraph.from_arrays(spark, src, dst, len(ids))
+    eng = None
+    try:
+        vals, eng = run(g)
+    finally:
+        if eng is not None:
+            eng.close()
+        g.unpersist()
+    if metrics is not None:
+        metrics.extend(
+            DFIterMetrics(
+                s.iteration, s.mode, s.active_vertices, s.active_edges, "driver"
+            )
+            for s in eng.metrics
+        )
+    # the DataFrame path's schema: ids (and the labels drawn from them)
+    # are nullable as the input is, a final rank never is
+    nullable = any(edges.schema[c].nullable for c in ("src", "dst"))
+    if value == "label":
+        vals, vfield = ids[vals], T.StructField(value, T.LongType(), nullable)
+    else:
+        vfield = T.StructField(value, T.DoubleType(), False)
+    schema = T.StructType([T.StructField("id", T.LongType(), nullable), vfield])
+    return spark.createDataFrame(pd.DataFrame({"id": ids, value: vals}), schema)
+
+
 def degrees(edges: DataFrame) -> DataFrame:
     """(id, out_degree, in_degree) over the edge multiset — the loader's
     degree pass (core/graph.hpp:798-821): every tuple counts."""
@@ -229,6 +320,7 @@ def pagerank(
     start_iter: int = 0,
     redistribute_dangling: bool = False,
     ckpt_interval: int = 1,
+    metrics: list[DFIterMetrics] | None = None,
 ) -> DataFrame:
     """Reference PageRank recurrence (toolkits/pagerank.cpp:24-99):
     state pre-divided by out-degree between iterations, final iteration
@@ -245,7 +337,22 @@ def pagerank(
     ``ckpt_interval=k`` checkpoints every k-th iteration only (resume
     replays ≤ k−1); intermediate iterations stay lazy, so the k-th
     checkpoint runs k chained joins in one job instead of k jobs.
+
+    A cold call (no ``start``) with the default checkpoint hook on a
+    small graph runs on the engine in the driver (see ``_on_driver``).
     """
+    if start is None:
+        from ..operators.algorithms import pagerank_engine
+
+        out = _on_driver(
+            edges, checkpoint, metrics, "rank", lambda s, t: (s, t),
+            lambda g: pagerank_engine(
+                g, iters, d, start_iter=start_iter,
+                redistribute_dangling=redistribute_dangling,
+            ),
+        )
+        if out is not None:
+            return out
     ck = _IntervalCkpt(
         checkpoint, ckpt_interval, lazy_chain=not redistribute_dangling
     )
@@ -255,7 +362,8 @@ def pagerank(
         F.sum("cnt").cast("double").alias("outd")
     )
     base = verts.join(deg, "id", "left").fillna(0.0, subset=["outd"]).persist()
-    n_verts = base.count()
+    st = base.agg(F.count(F.lit(1)), F.sum("outd")).first()
+    n_verts, n_edges = st[0], int(st[1] or 0)
     # NOTE (r7, measured): broadcast-hinting the state/msgs joins here is
     # a LOSS for this lazy-chain kernel — with ckpt_interval=k the k
     # chained iterations nest 2k BroadcastExchanges, each a separate
@@ -278,6 +386,8 @@ def pagerank(
             curr = ck.step(-1, curr)
 
         for i in range(start_iter, iters):
+            if metrics is not None:
+                metrics.append(DFIterMetrics(i, "dense", n_verts, n_edges))
             dm = 0.0
             if redistribute_dangling:
                 # dangling vertices are undivided, so their r IS their rank
@@ -419,9 +529,17 @@ def connected_components(
     """HashMin min-label propagation to fixpoint over the symmetrized graph
     (toolkits/cc.cpp:22-109), frontier-restricted: after the first sweep
     only vertices whose label dropped emit (cc.cpp:48-59 activation).
-    Returns (id long, label long)."""
+    Returns (id long, label long). Small graphs with the default
+    checkpoint hook run on the engine in the driver (see ``_on_driver``)."""
+    from ..operators.algorithms import cc_engine
     from .edges import symmetrize_df
 
+    out = _on_driver(
+        edges, checkpoint, metrics, "label", _sym_distinct,
+        lambda g: cc_engine(g, max_iters=max_iters),
+    )
+    if out is not None:
+        return out
     sym = symmetrize_df(edges).distinct().persist()
     verts = _vertices_of(edges)
     init = _with_outd(verts, sym).select(
@@ -527,9 +645,22 @@ def label_propagation(
     endpoints + new vertices (only vertices whose in-multiset changed can
     flip in the first sweep — identical labels to the full resume sweep,
     pinned by test_lp_warm_df_restricted_equals_full); without
-    ``new_edges`` the frontier is the safe "everyone" over-approximation."""
+    ``new_edges`` the frontier is the safe "everyone" over-approximation.
+
+    A cold call (no ``prior_labels``/``new_edges``) with the default
+    checkpoint hook on a small graph runs on the engine in the driver
+    (see ``_on_driver``), over the same symmetrized multiset."""
     from .edges import symmetrize_df
 
+    if prior_labels is None and new_edges is None:
+        from ..operators.algorithms import lp_engine
+
+        out = _on_driver(
+            edges, checkpoint, metrics, "label", _sym_multiset,
+            lambda g: lp_engine(g, iters),
+        )
+        if out is not None:
+            return out
     ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=False)
     sym = _collapsed(symmetrize_df(edges)).persist()
     n_edges = int(sym.agg(F.sum("cnt")).first()[0])
@@ -663,14 +794,24 @@ def _oriented(edges: DataFrame) -> DataFrame:
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
-    """Global triangle count (1 row: n_triangles long)."""
+    """Global triangle count (1 row: n_triangles long). Counted eagerly,
+    so the oriented edges cached for the three-way self-join are
+    released before the one-row result is returned."""
     o = _oriented(edges).persist()
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    out = tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-    return out
+    try:
+        e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
+        e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
+        e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
+        tri = e1.join(e2, "y").join(e3, ["x", "z"])
+        n = tri.agg(F.count(F.lit(1))).first()[0]
+    finally:
+        o.unpersist()
+    # through Arrow, like _on_driver's result: a frame made from a Python
+    # list would run its jobs through Python workers
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"n_triangles": [n]}),
+        T.StructType([T.StructField("n_triangles", T.LongType(), False)]),
+    )
 
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:

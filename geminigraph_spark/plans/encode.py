@@ -19,9 +19,11 @@ contiguous chunk ranges (core/graph.hpp:823-858): pages of the same site
 get adjacent ids, so edge locality (intra-site links dominate) maps to
 id-space locality, which chunking then exploits.
 
-The intermediate is persisted so both passes see the same (sample-based)
-range boundaries; any boundary choice yields the same final ids because
-ranks are offset by actual partition counts.
+The ranked intermediate is persisted so both passes see the same
+(sample-based) range boundaries; any boundary choice yields the same final
+ids because ranks are offset by actual partition counts. It is released
+once the returned dictionary is cached; the dictionary is the caller's to
+unpersist.
 """
 
 from __future__ import annotations
@@ -51,7 +53,9 @@ def assign_dense_ids(urls: DataFrame, num_partitions: int | None = None) -> Data
     per-batch pre-dedup feeds ONE range repartition; equal urls land in
     the same range partition, so a partition-local sort + cross-batch
     dedup + running rank replaces the former separate distinct() shuffle
-    AND the row_number window re-sort."""
+    AND the row_number window re-sort.
+
+    The result is cached and materialized; the caller unpersists it."""
     spark = urls.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -100,22 +104,17 @@ def assign_dense_ids(urls: DataFrame, num_partitions: int | None = None) -> Data
         .mapInPandas(dedup_rank, "url string, pid int, rn long")
         .persist()
     )
-    counts = d.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    counts = dict(d.groupBy("pid").agg(F.count(F.lit(1))).collect())
     pre.unpersist()
-    offsets = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["pid"]):
-        offsets[row["pid"]] = acc
-        acc += row["cnt"]
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-            "pid int, off long",
-        )
-    )
-    out = d.join(off_df, "pid").select(
-        "url", (F.col("off") + F.col("rn")).alias("id")
-    )
+    # offset of a range partition = urls in the partitions before it
+    per = [counts.get(p, 0) for p in range(max(counts, default=0) + 1)]
+    offs = np.cumsum([0] + per[:-1])
+    off = F.array(*[F.lit(int(o)) for o in offs])
+    out = d.select(
+        "url", (F.element_at(off, F.col("pid") + 1) + F.col("rn")).cast("long").alias("id")
+    ).persist()
+    out.count()  # built from d's cached blocks; d is not needed after this
+    d.unpersist()
     return out
 
 
@@ -127,12 +126,13 @@ def encode_edges(
     The vertex set is every url appearing on either side (the reference's
     "|V| covers all ids in the edge tuples" convention, README.md:25);
     external link targets are materialized as vertices (FIXTURES.md F1(d)).
+    A dictionary built here is cached; the caller unpersists it.
     """
     if vertex_dict is None:
         all_urls = edge_urls.select(F.col("src_url").alias("url")).unionByName(
             edge_urls.select(F.col("dst_url").alias("url"))
         )
-        vertex_dict = assign_dense_ids(all_urls).persist()
+        vertex_dict = assign_dense_ids(all_urls)
     src_d = vertex_dict.select(
         F.col("url").alias("src_url"), F.col("id").alias("src_id")
     )

@@ -32,6 +32,16 @@ import time
 
 
 def main() -> int:
+    graphs: list = []  # every ChunkedGraph this run builds or loads
+    try:
+        return _run(graphs)
+    finally:
+        # removes their temp spill dirs; saved graph tables stay
+        for g in graphs:
+            g.unpersist()
+
+
+def _run(graphs: list) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True,
                     choices=["pagerank", "ppr", "cc", "lp", "sssp", "bfs",
@@ -197,6 +207,7 @@ def main() -> int:
         g = ChunkedGraph.build(spark, e, n_chunks=n_chunks, weighted=weighted)
         if args.graph_table:
             g.save(args.graph_table, derivation=derivation)
+    graphs.append(g)
 
     start, start_iter = None, 0
     if args.resume and args.workload in ("kcore", "coreness", "hits"):
@@ -214,15 +225,17 @@ def main() -> int:
         # transpose() reuse (core/graph.hpp:759-768)
         gt_table = args.graph_table + "_t" if args.graph_table else ""
         if gt_table and os.path.exists(os.path.join(gt_table, "manifest.json")):
-            return ChunkedGraph.load(spark, gt_table, expect_derivation="transposed")
-        gt = ChunkedGraph.build(
-            spark,
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            n_chunks=n_chunks,
-            n_vertices=g.n_vertices,
-        )
-        if gt_table:
-            gt.save(gt_table, derivation="transposed")
+            gt = ChunkedGraph.load(spark, gt_table, expect_derivation="transposed")
+        else:
+            gt = ChunkedGraph.build(
+                spark,
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                n_chunks=n_chunks,
+                n_vertices=g.n_vertices,
+            )
+            if gt_table:
+                gt.save(gt_table, derivation="transposed")
+        graphs.append(gt)
         return gt
 
     multi = None

@@ -24,7 +24,9 @@ def g(spark):
     df = spark.createDataFrame(
         [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
     )
-    return ChunkedGraph.build(spark, df, n_chunks=4, n_vertices=n)
+    graph = ChunkedGraph.build(spark, df, n_chunks=4, n_vertices=n)
+    yield graph
+    graph.unpersist()
 
 
 def test_resume_mid_run_identical(spark, g, tmp_path):
@@ -249,4 +251,5 @@ def test_bc_engine_kill_resume_by_snapshot_id(spark, g, tmp_path):
     resumed2, _ = bc_engine(
         g, gt, root=root, start=(extra2["phase"], extra2["level"], arrays2)
     )
+    gt.unpersist()
     assert np.allclose(resumed2, straight, atol=0)

@@ -83,3 +83,18 @@ def test_chunks_contiguous_and_balanced(spark):
     ec = with_edge_chunks(edges, b).toPandas()
     want = np.searchsorted(b, ec["src_id"].values, side="right") - 1
     assert (ec["src_chunk"].values == want).all()
+
+
+def test_encode_caches_only_the_dictionary(spark):
+    """The ranked intermediate is released inside assign_dense_ids; the
+    returned dictionary is the one cached frame, and unpersisting it
+    leaves nothing cached."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    # an input no other test encodes: an equal plan would share its cache
+    edges, vdict = encode_edges(extract_links(gen_pages_df(spark, 150, seed=11)))
+    n = len(vdict.toPandas())
+    assert edges.toPandas()["src_id"].between(0, n - 1).all()
+    assert len(set(rdds().keys()) - before) == 1
+    vdict.unpersist()
+    assert set(rdds().keys()) <= before

@@ -41,7 +41,9 @@ def built(spark):
         "src long, dst long, w double",
     )
     wg = ChunkedGraph.build(spark, wdf, n_chunks=5, weighted=True, n_vertices=n)
-    return src, dst, w, n, g, sym, wg
+    yield src, dst, w, n, g, sym, wg
+    for graph in (g, sym, wg):
+        graph.unpersist()
 
 
 def test_build_invariants(built):
@@ -394,6 +396,44 @@ def test_lp_warm_start_restricted_equals_full(spark, built):
     sym2.unpersist()
 
 
+def test_from_arrays_packs_like_build(spark, built):
+    """Driver-packed chunks ≡ the build's: same boundaries and degrees,
+    the same edges per chunk, src-sorted, with the same src sets."""
+    import os
+
+    from geminigraph_spark.operators.chunked_graph import (
+        load_chunk_arrays,
+        load_chunk_usrcs,
+    )
+
+    src, dst, w, n, g, sym, wg = built
+    fa = ChunkedGraph.from_arrays(spark, src, dst, n, n_chunks=5)
+    try:
+        assert fa.n_edges == g.n_edges and fa.n_chunks == g.n_chunks
+        assert np.array_equal(fa.boundaries, g.boundaries)
+        assert np.array_equal(fa.out_degree, g.out_degree)
+        assert np.array_equal(fa.in_degree, g.in_degree)
+        for cid in range(fa.n_chunks):
+            name = f"chunk_{cid:05d}"
+            a = load_chunk_arrays(os.path.join(fa.spill_dir, name), False)
+            b = load_chunk_arrays(os.path.join(g.spill_dir, name), False)
+            assert (np.diff(a["srcs"]) >= 0).all()
+            ka = np.lexsort((a["dsts"], a["srcs"]))
+            kb = np.lexsort((b["dsts"], b["srcs"]))
+            for col in ("srcs", "dsts"):
+                assert np.array_equal(a[col][ka], b[col][kb])
+            assert np.array_equal(
+                load_chunk_usrcs(os.path.join(fa.spill_dir, name)),
+                load_chunk_usrcs(os.path.join(g.spill_dir, name)),
+            )
+        got, _ = pagerank_engine(fa, iters=6)
+        want, _ = pagerank_engine(g, iters=6)
+        assert np.allclose(got, want, rtol=0, atol=1e-12)
+    finally:
+        fa.unpersist()
+    assert not os.path.exists(fa.spill_dir)
+
+
 def test_pagerank_engine_matches_dataframe_path(spark, built):
     src, dst, w, n, g, sym, wg = built
     from geminigraph_spark.functions.graph_algos import pagerank
@@ -500,6 +540,7 @@ def test_bc_engine_matches_oracle(spark, built, tmp_path):
     root = int(src[0])
     want = O.bc_ref(src, dst, n, root=root)
     got, _ = bc_engine(g, gt, root=root)
+    gt.unpersist()
     assert np.allclose(got, want, atol=1e-9)
 
 
@@ -626,6 +667,7 @@ def test_k_core_engine_matches_reference_and_message_budget(spark, built):
         # every directed edge dies at most once: total processed messages
         # across the whole peel are bounded by |E_sym|
         assert sum(m_.processed_edges for m_ in eng.metrics) <= simple.n_edges
+    simple.unpersist()
 
 
 def test_coreness_engine_matches_reference_and_frontier_shrinks(spark, built):
@@ -649,6 +691,7 @@ def test_coreness_engine_matches_reference_and_frontier_shrinks(spark, built):
     act = [m_.active_vertices for m_ in eng.metrics]
     assert act[-1] <= act[0]
     eng.close()
+    simple.unpersist()
 
 
 def test_hits_engine_matches_oracle(spark, built):
@@ -661,6 +704,7 @@ def test_hits_engine_matches_oracle(spark, built):
     g_t = ChunkedGraph.build(spark, df_t, n_chunks=5, n_vertices=n)
     wa, wh = O.hits_ref(src, dst, n, iters=5)
     auth, hub, _ = hits_engine(g, g_t, iters=5)
+    g_t.unpersist()
     assert np.allclose(auth, wa, atol=1e-12)
     assert np.allclose(hub, wh, atol=1e-12)
 

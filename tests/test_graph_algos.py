@@ -1,4 +1,11 @@
-"""DataFrame kernels vs the pure-numpy reference recurrences (SURVEY §5.2)."""
+"""DataFrame kernels vs the pure-numpy reference recurrences (SURVEY §5.2).
+
+Every test runs the DataFrame kernels (module fixture below); the
+in-driver route tests at the end force the route on and off themselves."""
+
+import glob
+import os
+import tempfile
 
 import numpy as np
 import pytest
@@ -25,6 +32,9 @@ from geminigraph_spark.functions.graph_algos import (
     triangle_count,
     triangles_per_vertex,
 )
+from geminigraph_spark.operators import engine
+
+pytestmark = pytest.mark.usefixtures("dataframe_route")
 
 
 def _graph(n=120, m=700, seed=3):
@@ -824,3 +834,115 @@ def test_mis_raises_on_truncated_fixpoint(spark):
     df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     with pytest.raises(RuntimeError, match="live edges remain"):
         maximal_independent_set(df, max_iters=0)
+
+
+# ---------------------------------------------------- in-driver route
+ROUTED = [
+    (pagerank, {"iters": 8}),
+    (pagerank, {"iters": 8, "redistribute_dangling": True}),
+    (connected_components, {}),
+    (label_propagation, {"iters": 5}),
+]
+
+
+@pytest.fixture(scope="module")
+def sparse_ids(spark, g):
+    """The module graph with ids spread over a wide, gapped range, so
+    the route's dense-id mapping is not the identity."""
+    src, dst, n, _ = g
+    ids = np.arange(n, dtype=np.int64) * 7919 + 10**10
+    return spark.createDataFrame(
+        [(int(s), int(d)) for s, d in zip(ids[src], ids[dst])], "src long, dst long"
+    ).coalesce(4)
+
+
+def _run(fn, df, **kw):
+    mets = []
+    out = fn(df, metrics=mets, **kw)
+    return out.schema, out.toPandas().sort_values("id").reset_index(drop=True), mets
+
+
+def _routes(fn, *args, **kw):
+    mets = []
+    fn(*args, metrics=mets, **kw)
+    return {m.route for m in mets}
+
+
+@pytest.mark.parametrize(
+    "fn,kw", ROUTED, ids=["pagerank", "pagerank_redistribute", "cc", "lp"]
+)
+def test_driver_route_matches_dataframe_route(spark, sparse_ids, monkeypatch, fn, kw):
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    s_drv, p_drv, m_drv = _run(fn, sparse_ids, **kw)
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", -1)
+    s_df, p_df, m_df = _run(fn, sparse_ids, **kw)
+    assert {m.route for m in m_drv} == {"driver"}
+    assert {m.route for m in m_df} == {"dataframe"}
+    assert s_drv == s_df
+    assert (p_drv["id"].values == p_df["id"].values).all()
+    col = s_df.names[1]
+    if col == "rank":
+        assert np.allclose(p_drv[col].values, p_df[col].values, rtol=0, atol=1e-9)
+    else:
+        assert (p_drv[col].values == p_df[col].values).all()
+
+    def steps(ms):
+        return [(m.iteration, m.mode, m.active_vertices, m.active_edges) for m in ms]
+
+    assert len(m_drv) > 1
+    assert steps(m_drv) == steps(m_df)
+
+
+def test_driver_route_gates(spark, g, monkeypatch):
+    """Observed or resumed calls, cluster masters and graphs one edge
+    above the constant keep the DataFrame kernels."""
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    hook = lambda _i, d: d.localCheckpoint(eager=True)  # noqa: E731
+    assert _routes(pagerank, df, iters=2, checkpoint=hook) == {"dataframe"}
+    assert _routes(connected_components, df, checkpoint=hook) == {"dataframe"}
+    assert _routes(label_propagation, df, iters=2, checkpoint=hook) == {"dataframe"}
+    start = pagerank(df, iters=3)
+    assert _routes(pagerank, df, iters=3, start=start, start_iter=2) == {"dataframe"}
+    prior = label_propagation(df, iters=2)
+    assert _routes(label_propagation, df, iters=2, prior_labels=prior) == {
+        "dataframe"
+    }
+    with monkeypatch.context() as mp:
+        mp.setattr("geminigraph_spark.session.is_local_master", lambda _s: False)
+        assert _routes(connected_components, df) == {"dataframe"}
+
+    # engine graph sizes: directed multiset, distinct symmetrized edges,
+    # symmetrized multiset
+    n_sym = len(np.unique(np.concatenate([src * n + dst, dst * n + src])))
+    for fn, kw, size in [
+        (pagerank, {"iters": 2}, len(src)),
+        (connected_components, {"max_iters": 2}, n_sym),
+        (label_propagation, {"iters": 2}, 2 * len(src)),
+    ]:
+        monkeypatch.setattr(engine, "DRIVER_MAX_WORK", size)
+        assert _routes(fn, df, **kw) == {"driver"}, fn.__name__
+        monkeypatch.setattr(engine, "DRIVER_MAX_WORK", size - 1)
+        assert _routes(fn, df, **kw) == {"dataframe"}, fn.__name__
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_driver_route_leaves_nothing_behind(spark, g, monkeypatch):
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    spills = os.path.join(tempfile.gettempdir(), "gemini_*")
+    rdds, dirs = _persistent_rdds(spark), set(glob.glob(spills))
+    for fn, kw in ROUTED:
+        assert _routes(fn, df, **kw) == {"driver"}
+    assert _persistent_rdds(spark) <= rdds
+    assert set(glob.glob(spills)) <= dirs
+
+
+def test_triangle_count_releases_its_cache(spark, g):
+    src, dst, n, df = g
+    rdds = _persistent_rdds(spark)
+    assert len(triangle_count(df).collect()) == 1
+    assert _persistent_rdds(spark) <= rdds

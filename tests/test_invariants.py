@@ -36,7 +36,9 @@ def built(spark):
     )
     g = ChunkedGraph.build(spark, df, n_chunks=4, n_vertices=n)
     sym = ChunkedGraph.build(spark, symmetrize_df(df), n_chunks=4, n_vertices=n)
-    return src, dst, n, g, sym
+    yield src, dst, n, g, sym
+    g.unpersist()
+    sym.unpersist()
 
 
 def test_pagerank_sum_and_argmax(built):
@@ -83,6 +85,7 @@ def test_sssp_farthest_vertex(built):
     wg = ChunkedGraph.build(g.spark, wdf, n_chunks=4, weighted=True, n_vertices=n)
     root = int(src[0])
     dist, _ = sssp_engine(wg, root=root)
+    wg.unpersist()
     want = O.sssp_ref(src, dst, w, n, root=root)
     reach = want < 1e9
     far_w = np.argmax(np.where(reach, want, -1))

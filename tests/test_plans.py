@@ -8,6 +8,8 @@ import pytest
 
 SF = "/root/testdata/sf0.001"
 
+pytestmark = pytest.mark.usefixtures("dataframe_route")
+
 
 def _formatted(df) -> str:
     jvm = df.sparkSession._jvm
