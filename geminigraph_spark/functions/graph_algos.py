@@ -25,14 +25,16 @@ Small cold calls run on that engine in the driver: ``pagerank``,
 ``connected_components`` and ``label_propagation`` hand the call to
 ``_on_driver`` when the master is local, the checkpoint hook is the
 default one, no ``start``/``prior_labels``/``new_edges`` is given, and
-the engine graph has at most ``engine.DRIVER_MAX_WORK`` edges. A Spark
-job per superstep costs far more than a small graph's numpy work, and
-such a call observes nothing between supersteps, so only its result
-(same schema, same labels, ranks within 1e-9) and its per-superstep
-``DFIterMetrics`` (``route="driver"``) are owed. A custom hook must see
-each superstep's frame and a resume or warm start begins from a
-caller's frame: those calls, cluster masters and larger graphs keep the
-DataFrame kernels below. ``triangle_count`` has no engine kernel.
+the engine graph has at most ``engine.DRIVER_MAX_WORK`` edges (counted
+as the input rows for pagerank and twice them for the symmetrized CC
+and LP graphs). A Spark job per superstep costs far more than a small
+graph's numpy work, and such a call observes nothing between
+supersteps, so only its result (same schema, same labels, ranks within
+1e-9) and its per-superstep ``DFIterMetrics`` (``route="driver"``) are
+owed. A custom hook must see each superstep's frame and a resume or
+warm start begins from a caller's frame: those calls, cluster masters
+and larger graphs keep the DataFrame kernels below. ``triangle_count``
+has no engine kernel.
 """
 
 from __future__ import annotations
@@ -233,17 +235,20 @@ def _sym_distinct(src: np.ndarray, dst: np.ndarray):
     return key // n, key % n
 
 
-def _on_driver(edges, checkpoint, metrics, value, derive, run):
+def _on_driver(edges, checkpoint, metrics, value, derive, run, per_row=1):
     """The in-driver route of pagerank / connected_components /
     label_propagation: the same recurrence on the chunked engine, whose
     supersteps then all run in the driver process. Returns the result
     frame, or None when the call stays on the DataFrame path.
 
     Taken on a local master (``session.is_local_master``), for a call
-    with the default checkpoint hook, when the engine graph has at most
-    ``engine.DRIVER_MAX_WORK`` edges. The edges are collected through
-    Arrow with a bounded ``limit`` probe, so a larger input falls
-    through after one job. Ids map to dense ids in sorted order, which
+    with the default checkpoint hook, when the input has at most
+    ``engine.DRIVER_MAX_WORK // per_row`` rows: ``per_row`` bounds the
+    engine-graph edges an input row makes (1 for the directed multiset,
+    2 for the symmetrized graphs), so the engine graph fits the cap. The
+    edges are collected through Arrow with a ``limit`` probe of one row
+    more, so a larger input falls through after one job that ships at
+    most that many rows. Ids map to dense ids in sorted order, which
     keeps min-id labels and smallest-label tie breaks unchanged.
     ``derive(src, dst)`` gives the engine graph's edges, ``run(graph)``
     the kernel's (values, engine); label values are mapped back to ids."""
@@ -252,13 +257,13 @@ def _on_driver(edges, checkpoint, metrics, value, derive, run):
     from ..session import is_local_master
 
     spark = edges.sparkSession
-    cap = engine.DRIVER_MAX_WORK
     if checkpoint is not _default_ckpt or not is_local_master(spark):
         return None
     if any(edges.schema[c].dataType != T.LongType() for c in ("src", "dst")):
         return None
-    t = edges.select("src", "dst").limit(cap + 1).toArrow()
-    if not 0 < t.num_rows <= cap or t["src"].null_count or t["dst"].null_count:
+    rows = engine.DRIVER_MAX_WORK // per_row
+    t = edges.select("src", "dst").limit(rows + 1).toArrow()
+    if not 0 < t.num_rows <= rows or t["src"].null_count or t["dst"].null_count:
         return None
     m = t.num_rows
     ids, dense = np.unique(
@@ -266,8 +271,6 @@ def _on_driver(edges, checkpoint, metrics, value, derive, run):
         return_inverse=True,
     )
     src, dst = derive(dense[:m], dense[m:])
-    if len(src) > cap:
-        return None
     g = ChunkedGraph.from_arrays(spark, src, dst, len(ids))
     eng = None
     try:
@@ -536,7 +539,7 @@ def connected_components(
 
     out = _on_driver(
         edges, checkpoint, metrics, "label", _sym_distinct,
-        lambda g: cc_engine(g, max_iters=max_iters),
+        lambda g: cc_engine(g, max_iters=max_iters), per_row=2,
     )
     if out is not None:
         return out
@@ -657,7 +660,7 @@ def label_propagation(
 
         out = _on_driver(
             edges, checkpoint, metrics, "label", _sym_multiset,
-            lambda g: lp_engine(g, iters),
+            lambda g: lp_engine(g, iters), per_row=2,
         )
         if out is not None:
             return out

@@ -109,6 +109,15 @@ _MIN_TASKS = int(os.environ.get("SPARK_GRAFT_MIN_TASKS", "4"))
 #: LP's lexsort-bound ``mode`` loses to parallel tasks already at 2M
 #: edges (LP5 3.5-3.6 vs 4.6-4.9 s) and breaks even at ~1M. Raise the
 #: limit only with a measured mode/hindex win.
+#:
+#: It also caps the engine graph of the DataFrame pagerank / CC / LP
+#: calls that ``functions.graph_algos._on_driver`` runs on this engine.
+#: There it bounds the driver's copy of the edges, not a break-even:
+#: on the same host (synth graphs, |V| = |E|/4, parquet input, 1-2 runs
+#: each) the DataFrame kernels vs the route at 1M engine edges took
+#: PR20 20-24 vs 2.9-3.0 s, CC 6.4-8.0 vs 1.8-2.0 s and LP5 10.8-10.9
+#: vs 3.4-3.7 s, and at 3M (route forced, all supersteps in the
+#: driver) PR20 58 vs 7.8-8.4 s, CC 14 vs 4.9 s and LP5 24 vs 11-12 s.
 DRIVER_MAX_WORK = 1_000_000
 
 

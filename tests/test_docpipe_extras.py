@@ -516,7 +516,7 @@ def test_streaming_dedup_hashes_raw_bytes(spark, tmp_path):
     assert sorted(final.values) == [1, 2]  # the \xff payload appears twice
 
 
-def test_streaming_incremental_cc_matches_cold(spark, tmp_path):
+def test_streaming_incremental_cc_matches_cold(spark, tmp_path, monkeypatch):
     """Two edge micro-batches through the incremental-CC stream: batch 1
     has two separate components, batch 2 bridges them plus adds a new
     vertex pair. Final published labels must EQUAL cold CC over the full
@@ -525,6 +525,7 @@ def test_streaming_incremental_cc_matches_cold(spark, tmp_path):
     import numpy as np
 
     from geminigraph_spark.functions.graph_algos import connected_components
+    from geminigraph_spark.operators import engine
     from geminigraph_spark.streaming.ingest import (
         read_cc_labels,
         start_incremental_cc,
@@ -552,12 +553,17 @@ def test_streaming_incremental_cc_matches_cold(spark, tmp_path):
         .reset_index(drop=True)
     )
     full = spark.read.parquet(state + "/edges")
-    want = (
-        connected_components(full)
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
+    # the reference is the DataFrame kernel, not its in-driver route
+    mets = []
+    with monkeypatch.context() as mp:
+        mp.setattr(engine, "DRIVER_MAX_WORK", -1)
+        want = (
+            connected_components(full, metrics=mets)
+            .toPandas()
+            .sort_values("id")
+            .reset_index(drop=True)
+        )
+    assert {m.route for m in mets} == {"dataframe"}
     assert np.array_equal(got["id"].values, want["id"].values)
     assert np.array_equal(got["label"].values, want["label"].values)
     # the bridge merged 0-1-2 with 10-11; the new pair got its own label

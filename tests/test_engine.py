@@ -434,14 +434,20 @@ def test_from_arrays_packs_like_build(spark, built):
     assert not os.path.exists(fa.spill_dir)
 
 
-def test_pagerank_engine_matches_dataframe_path(spark, built):
+def test_pagerank_engine_matches_dataframe_path(spark, built, monkeypatch):
     src, dst, w, n, g, sym, wg = built
     from geminigraph_spark.functions.graph_algos import pagerank
+    from geminigraph_spark.operators import engine
 
     df = spark.createDataFrame(
         [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
     )
-    df_res = pagerank(df, iters=6).toPandas()
+    # the DataFrame kernel, not its in-driver route onto pagerank_engine
+    mets = []
+    with monkeypatch.context() as mp:
+        mp.setattr(engine, "DRIVER_MAX_WORK", -1)
+        df_res = pagerank(df, iters=6, metrics=mets).toPandas()
+    assert {m.route for m in mets} == {"dataframe"}
     got, _ = pagerank_engine(g, iters=6)
     for _, row in df_res.iterrows():
         assert abs(got[int(row["id"])] - row["rank"]) < 1e-9

@@ -912,18 +912,40 @@ def test_driver_route_gates(spark, g, monkeypatch):
         mp.setattr("geminigraph_spark.session.is_local_master", lambda _s: False)
         assert _routes(connected_components, df) == {"dataframe"}
 
-    # engine graph sizes: directed multiset, distinct symmetrized edges,
-    # symmetrized multiset
-    n_sym = len(np.unique(np.concatenate([src * n + dst, dst * n + src])))
+    # engine graph bounds: the directed multiset for pagerank, the
+    # symmetrized multiset (CC runs on its distinct edges) for CC and LP
     for fn, kw, size in [
         (pagerank, {"iters": 2}, len(src)),
-        (connected_components, {"max_iters": 2}, n_sym),
+        (connected_components, {"max_iters": 2}, 2 * len(src)),
         (label_propagation, {"iters": 2}, 2 * len(src)),
     ]:
         monkeypatch.setattr(engine, "DRIVER_MAX_WORK", size)
         assert _routes(fn, df, **kw) == {"driver"}, fn.__name__
         monkeypatch.setattr(engine, "DRIVER_MAX_WORK", size - 1)
         assert _routes(fn, df, **kw) == {"dataframe"}, fn.__name__
+
+
+def test_driver_route_probe_is_bounded(spark, g, monkeypatch):
+    """A call above the cap falls through after a probe of one row more
+    than the input rows that fit: the cap for pagerank, half of it for
+    the symmetrized CC and LP graphs."""
+    src, dst, n, df = g
+    cap = len(src) - 1
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", cap)
+    frame = type(df)
+    limit = frame.limit
+    for fn, kw, probe in [
+        (pagerank, {"iters": 2}, cap + 1),
+        (connected_components, {"max_iters": 2}, cap // 2 + 1),
+        (label_propagation, {"iters": 2}, cap // 2 + 1),
+    ]:
+        seen = []
+        with monkeypatch.context() as mp:
+            mp.setattr(
+                frame, "limit", lambda self, k: seen.append(k) or limit(self, k)
+            )
+            assert _routes(fn, df, **kw) == {"dataframe"}, fn.__name__
+        assert seen[:1] == [probe], fn.__name__
 
 
 def _persistent_rdds(spark) -> set:
