@@ -413,13 +413,13 @@ def _ext_directed_legs(spark, g, V, E, n_chunks, spill, q, meta, R) -> None:
     import numpy as np
     from pyspark.sql import functions as F
 
-    from geminigraph_spark.operators.algorithms import hits_engine, ppr_engine
+    from geminigraph_spark.operators.algorithms import hits_engine, pagerank_engine
     from geminigraph_spark.operators.chunked_graph import ChunkedGraph
 
     seeds = np.zeros(V, dtype=bool)
     seeds[::1000] = True
     _leg(spark, q, meta, "synth_ppr20",
-         lambda: ppr_engine(g, seeds, iters=20), runs=R)
+         lambda: pagerank_engine(g, iters=20, teleport=seeds), runs=R)
 
     t0 = time.time()
     e = _synth_edges_df(spark, V, E, seed=42, n_parts=n_chunks)

@@ -40,6 +40,8 @@ has no engine kernel.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -261,7 +263,8 @@ def _on_driver(edges, checkpoint, metrics, value, derive, run, per_row=1):
         return None
     if any(edges.schema[c].dataType != T.LongType() for c in ("src", "dst")):
         return None
-    rows = engine.DRIVER_MAX_WORK // per_row
+    # DataFrame.limit takes a Java int: keep the probe (rows + 1) in range
+    rows = min(engine.DRIVER_MAX_WORK // per_row, 2**31 - 2)
     t = edges.select("src", "dst").limit(rows + 1).toArrow()
     if not 0 < t.num_rows <= rows or t["src"].null_count or t["dst"].null_count:
         return None
@@ -1611,25 +1614,50 @@ def coreness(
     return cur.select("id", F.col("c").cast("int").alias("coreness"))
 
 
+def _simple_und(edges: DataFrame) -> DataFrame:
+    """The simple undirected graph: distinct (a, b) pairs with a < b,
+    self-loops dropped."""
+    return (
+        edges.where(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .distinct()
+    )
+
+
 def _simple_adj(edges: DataFrame, undirected: bool) -> DataFrame:
     """Deduplicated adjacency (v, u): symmetrized distinct simple pairs
     when undirected (self-loops dropped), distinct directed pairs
     otherwise (self-loops kept — they never change a BFS depth)."""
     if undirected:
-        und = (
-            edges.where(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-        )
+        und = _simple_und(edges)
         return und.select(
             F.col("a").alias("v"), F.col("b").alias("u")
         ).unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
     return edges.select(
         F.col("src").alias("v"), F.col("dst").alias("u")
     ).distinct()
+
+
+@contextmanager
+def _parquet_spill(spark, spill_dir: str | None, prefix: str):
+    """Yield ``spill(df, name)``: write ``df`` as parquet under the spill
+    dir and read it back — a fresh plan root per round for the peeling
+    kernels (see ``k_truss``). Without a caller's ``spill_dir`` the
+    kernel gets a temp dir, removed on exit."""
+    tmp = spill_dir or tempfile.mkdtemp(prefix=prefix)
+
+    def spill(df: DataFrame, name: str) -> DataFrame:
+        p = os.path.join(tmp, name)
+        df.write.mode("overwrite").parquet(p)
+        return spark.read.parquet(p)
+
+    try:
+        yield spill
+    finally:
+        if spill_dir is None:
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
 def multi_source_bfs(
@@ -1866,36 +1894,13 @@ def maximal_independent_set(
     and Luby at crawl scale runs ~25-30 rounds — squarely inside the
     creep regime. The spill is the size of the shrinking live set and
     doubles as a free per-round resume point."""
-    import os
-    import shutil
-    import tempfile
-
-    spark = edges.sparkSession
-    tmp = spill_dir or tempfile.mkdtemp(prefix="gemini_mis_")
-    own_tmp = spill_dir is None
-
-    def spill(df: DataFrame, name: str) -> DataFrame:
-        p = os.path.join(tmp, name)
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
     verts = _vertices_of(edges)
 
     def pri(c):
         return ((c % MIS_VMOD) * MIS_VMUL + MIS_ADD) % MIS_PMOD
 
-    try:
-        adj = spill(adj, "adj")
+    with _parquet_spill(edges.sparkSession, spill_dir, "gemini_mis_") as spill:
+        adj = spill(_simple_adj(edges, True), "adj")
         live = spill(adj, "live_-1")
         n_live = live.count()
         # vertices with no simple edge at all are independent by vacuity
@@ -1959,11 +1964,8 @@ def maximal_independent_set(
         out = verts.join(flag, "id", "left").select(
             "id", F.coalesce(F.col("in_mis"), F.lit(0)).cast("int").alias("in_mis")
         )
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if own_tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
+
 
 def neighborhood_function(
     edges: DataFrame,
@@ -2095,30 +2097,10 @@ def k_truss(
     shrinks monotonically, so rounds get cheaper as the peel deepens;
     rounds are bounded by the peeling depth. Early exit compares
     live-edge counts."""
-    import os
-    import shutil
-    import tempfile
-
     if k < 2:
         raise ValueError("k_truss requires k >= 2")
-    spark = edges.sparkSession
-    tmp = spill_dir or tempfile.mkdtemp(prefix="gemini_truss_")
-    own_tmp = spill_dir is None
-
-    def spill(df: DataFrame, i: int) -> DataFrame:
-        p = os.path.join(tmp, f"live_{i}")
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    try:
-        live = spill(und, -1)
+    with _parquet_spill(edges.sparkSession, spill_dir, "gemini_truss_") as spill:
+        live = spill(_simple_und(edges), "live_-1")
         n_live = live.count()
         need = k - 2
         for i in range(max_iters):
@@ -2140,7 +2122,7 @@ def k_truss(
                 .where(F.coalesce(F.col("s"), F.lit(0)) >= need)
                 .select("a", "b")
             )
-            live = spill(nxt, i)
+            live = spill(nxt, f"live_{i}")
             m = live.count()
             if m == n_live:
                 break
@@ -2149,8 +2131,4 @@ def k_truss(
             F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b")
         )
         # materialize before the spill dir disappears
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if own_tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)

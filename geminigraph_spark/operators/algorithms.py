@@ -30,12 +30,18 @@ def pagerank_engine(
     start: np.ndarray | None = None,
     start_iter: int = 0,
     redistribute_dangling: bool = False,
+    teleport: np.ndarray | None = None,
 ) -> tuple[np.ndarray, VertexEngine]:
     """Reference recurrence (pagerank.cpp:24-99): pre-divided state,
     undivided final iteration, dangling mass dropped by default;
     ``redistribute_dangling=True`` spreads Σ_{dangling} rank / |V| to
     every vertex instead (textbook power iteration) — the mass sum is a
     free numpy reduction on the driver-resident state.
+
+    ``teleport`` (a seed mask over vertices; None = every vertex) makes
+    it personalized PageRank: r ← (1-d)·1[v∈S] + d·Σ_in, starting from
+    the seed indicator (mass |S|). Always dense / full frontier: mass
+    spreads from the whole state each superstep.
 
     Resume contract: snapshots hold the PRE-DIVIDED state except the
     final iteration's, which is the undivided result (the reference's
@@ -45,17 +51,18 @@ def pagerank_engine(
     eng = VertexEngine(graph)
     outd = graph.out_degree.astype(np.float64)
     nz = outd > 0
+    tele = 1.0 if teleport is None else teleport.astype(np.float64)
     if start is not None:
         curr = start.astype(np.float64).copy()
     else:
-        curr = np.ones(graph.n_vertices, dtype=np.float64)
+        curr = np.ones(graph.n_vertices, dtype=np.float64) * tele
         curr[nz] /= outd[nz]
     for i in range(start_iter, iters):
         dm = float(curr[~nz].sum()) if redistribute_dangling else 0.0
         ids, vals = eng.edge_aggregate(curr, "sum", iteration=i)
         nxt = np.zeros(graph.n_vertices, dtype=np.float64)
         nxt[ids] = vals
-        nxt = (1.0 - d) + d * (nxt + dm / graph.n_vertices)
+        nxt = (1.0 - d) * tele + d * (nxt + dm / graph.n_vertices)
         if i != iters - 1:
             nxt[nz] /= outd[nz]
         curr = nxt
@@ -395,80 +402,6 @@ def cc_engine_warm(
         start=extend_labels(prior_labels, n),
         start_frontier=append_frontier(n, len(prior_labels), new_src, new_dst),
     )
-
-
-def warm_cc_update(
-    spark,
-    all_edges,
-    new_edges,
-    prior_labels: np.ndarray,
-    n_chunks: int = 8,
-    max_delta_edges: int = 50_000_000,
-) -> tuple[np.ndarray, VertexEngine]:
-    """End-to-end warm CC refresh for an APPEND-ONLY edge table (the
-    shape streaming/ingest.start_edge_ingest produces: each micro-batch
-    appends encoded edge rows): rebuild the chunked graph over the full
-    table, collect only the DELTA's endpoints (bounded by the append
-    size, never O(|E|)), and warm-start from the prior labels. Requires
-    a stable vertex-id space (append-only dictionary encoding).
-
-    The delta collect is ENFORCED bounded (VERDICT r5 wrong #2): a
-    caller passing a delta wider than ``max_delta_edges`` gets a loud
-    ValueError instead of a silent driver OOM — at that size a cold
-    ``cc_engine`` run is the right tool anyway."""
-    from ..functions.edges import symmetrize_df
-
-    g = ChunkedGraph.build(spark, symmetrize_df(all_edges), n_chunks=n_chunks)
-    n_delta = new_edges.count()
-    if n_delta > max_delta_edges:
-        raise ValueError(
-            f"warm_cc_update: delta has {n_delta} edges > max_delta_edges="
-            f"{max_delta_edges}; the warm-start contract is a driver-"
-            "bounded append. Run cc_engine cold (or raise the bound if "
-            "the driver really has the memory)."
-        )
-    ep = new_edges.select("src", "dst").toPandas()
-    return cc_engine_warm(
-        g, prior_labels, ep["src"].values, ep["dst"].values
-    )
-
-
-def ppr_engine(
-    graph: ChunkedGraph,
-    seed_mask: np.ndarray,
-    iters: int = 10,
-    d: float = 0.85,
-    on_state: StateHook | None = None,
-    start: np.ndarray | None = None,
-    start_iter: int = 0,
-) -> tuple[np.ndarray, VertexEngine]:
-    """Personalized PageRank on the chunked engine: pagerank_engine's
-    recurrence (pre-divided state, undivided final iteration, dangling
-    mass dropped — pagerank.cpp:24-99 conventions) with the uniform
-    teleport replaced by the seed indicator, r ← (1-d)·1[v∈S] + d·Σ_in.
-    Initial state is the seed indicator (mass |S|). Always dense / full
-    frontier, like PageRank (mass spreads from the whole state each
-    superstep). Resume contract identical to pagerank_engine."""
-    eng = VertexEngine(graph)
-    outd = graph.out_degree.astype(np.float64)
-    nz = outd > 0
-    tele = seed_mask.astype(np.float64)
-    if start is not None:
-        curr = start.astype(np.float64).copy()
-    else:
-        curr = tele.copy()
-        curr[nz] /= outd[nz]
-    for i in range(start_iter, iters):
-        ids, vals = eng.edge_aggregate(curr, "sum", iteration=i)
-        nxt = np.zeros(graph.n_vertices, dtype=np.float64)
-        nxt[ids] = vals
-        nxt = (1.0 - d) * tele + d * nxt
-        if i != iters - 1:
-            nxt[nz] /= outd[nz]
-        curr = nxt
-        if on_state is not None:
-            on_state(i, curr)
-    return curr, eng
 
 
 def k_core_engine(

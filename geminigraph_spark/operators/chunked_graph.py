@@ -17,11 +17,15 @@ per chunk (int32 ids when |V| < 2^31) and **memory-mapped by the worker
 tasks** each superstep — the OS page cache keeps a single shared copy hot
 across supersteps and across local-executor worker processes. This is the
 Spark-local analogue of Gemini keeping its CSR resident per socket
-(graph.hpp:228-236): the iteration loop ships only a chunk-metadata row
-per task plus one broadcast of the vertex state. On a multi-node cluster
-the same layout is executor-local storage (shuffle-persisted blocks or
-Iceberg data files with locality hints); nothing in the superstep path
-assumes a shared filesystem except chunk-file placement.
+(graph.hpp:228-236): the iteration loop ships each task only its chunks'
+(id, dst range, spill path) items plus the vertex state. The chunk list
+itself (``ChunkedGraph.chunks``) is a few tuples per chunk held in the
+driver, like the boundary array every Gemini node holds
+(core/graph.hpp:213); nothing about a graph is cached in Spark. On a
+multi-node cluster the same layout is executor-local storage
+(shuffle-persisted blocks or Iceberg data files with locality hints);
+nothing in the superstep path assumes a shared filesystem except
+chunk-file placement.
 
 Vertex state stays on the driver as dense numpy arrays (the reference
 replicates state per node) and is broadcast each superstep; the collected
@@ -211,12 +215,13 @@ def _pack_from_blocks(
     return pack
 
 
-def _pack_fn(boundaries: np.ndarray, spill_dir: str, idt):
-    """applyInPandas body shared by build() and load(): pack one dst-chunk's
-    edges into src-sorted spill arrays and return its metadata row."""
+def _pack_rows(grouped, boundaries: np.ndarray, spill_dir: str, idt) -> list:
+    """build() and load(): pack each dst-chunk group of ``grouped`` into
+    src-sorted spill arrays in one applyInPandas job and collect the
+    sorted (chunk_id, begin, end, n_edges, path) tuples."""
     b = np.asarray(boundaries, dtype=np.int64)
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         cid = int(key[0])
         path, n = _save_chunk(
             spill_dir, cid, pdf["src"].values, pdf["dst"].values,
@@ -232,7 +237,8 @@ def _pack_fn(boundaries: np.ndarray, spill_dir: str, idt):
             }
         )
 
-    return pack
+    rows = grouped.applyInPandas(pack, _CHUNK_SCHEMA).collect()
+    return sorted(tuple(r) for r in rows)
 
 
 def save_chunk_arrays(path_prefix: str, arrays: dict) -> None:
@@ -277,7 +283,9 @@ class ChunkedGraph:
     boundaries: np.ndarray  # int64[n_chunks+1]
     out_degree: np.ndarray  # int64[n_vertices] (multiset)
     in_degree: np.ndarray
-    chunks: DataFrame  # cached metadata rows (arrays live in spill files)
+    #: sorted (chunk_id, begin, end, n_edges, path) tuples, one per packed
+    #: chunk, held in the driver (the arrays live in the spill files)
+    chunks: list
     spill_dir: str = ""
     weighted: bool = False
     owns_spill: bool = True
@@ -390,13 +398,7 @@ class ChunkedGraph:
             )
 
         tagged = e.withColumn("dst_chunk", chunk_of(F.col("dst")))
-        chunks = (
-            tagged.groupBy("dst_chunk")
-            .applyInPandas(_pack_fn(b, spill_dir, idt), _CHUNK_SCHEMA)
-            .repartition(n_chunks, "chunk_id")
-            .persist()
-        )
-        n_chunk_rows = chunks.count()  # materialize: writes spill files
+        chunks = _pack_rows(tagged.groupBy("dst_chunk"), b, spill_dir, idt)
         return cls(
             spark=spark,
             n_vertices=n_vertices,
@@ -408,10 +410,7 @@ class ChunkedGraph:
             chunks=chunks,
             spill_dir=spill_dir,
             weighted=weighted,
-            build_meta={
-                "build_s": time.time() - t0,
-                "chunk_rows": int(n_chunk_rows),
-            },
+            build_meta={"build_s": time.time() - t0, "chunk_rows": len(chunks)},
         )
 
     # -------------------------------------------------- single-scan build
@@ -478,7 +477,7 @@ class ChunkedGraph:
         pack = _pack_from_blocks(
             bucket_dir, spill_dir, b, V, B, weighted, idt
         )
-        rows = [
+        chunks = [
             r
             for r in sc.parallelize(range(n_chunks), n_chunks).map(pack).collect()
             if r is not None
@@ -492,12 +491,6 @@ class ChunkedGraph:
                     os.remove(os.path.join(spill_dir, f"deg_{bid:05d}.{suffix}.npy"))
                 except OSError:
                     pass
-        chunks = (
-            spark.createDataFrame(rows, _CHUNK_SCHEMA)
-            .repartition(n_chunks, "chunk_id")
-            .persist()
-        )
-        n_chunk_rows = chunks.count()
         return cls(
             spark=spark,
             n_vertices=V,
@@ -513,7 +506,7 @@ class ChunkedGraph:
                 "build_s": time.time() - t0,
                 "scan_s": round(t_scan - t0, 3),
                 "pack_s": round(t_pack - t_scan, 3),
-                "chunk_rows": int(n_chunk_rows),
+                "chunk_rows": len(chunks),
                 "single_scan": True,
             },
         )
@@ -534,27 +527,17 @@ class ChunkedGraph:
         edges by dst chunk (used by the synthetic bench graph — skips the
         bucketing shuffle entirely)."""
         n_chunks = len(boundaries) - 1
-        rows = []
-        n_edges = 0
+        chunks = []
         for cid in range(n_chunks):
             path = os.path.join(spill_dir, f"chunk_{cid:05d}")
             ne = len(np.load(f"{path}.srcs.npy", mmap_mode="r"))
-            rows.append(
+            chunks.append(
                 (cid, int(boundaries[cid]), int(boundaries[cid + 1]), ne, path)
             )
-            n_edges += ne
-        chunks = (
-            spark.createDataFrame(
-                pd.DataFrame(rows, columns=["chunk_id", "begin", "end", "n_edges", "path"])
-            )
-            .repartition(n_chunks, "chunk_id")
-            .persist()
-        )
-        chunks.count()
         return cls(
             spark=spark,
             n_vertices=len(out_degree),
-            n_edges=n_edges,
+            n_edges=sum(c[3] for c in chunks),
             n_chunks=n_chunks,
             boundaries=np.asarray(boundaries, dtype=np.int64),
             out_degree=out_degree,
@@ -655,7 +638,8 @@ class ChunkedGraph:
                     yield pd.DataFrame(out)
 
         (
-            self.chunks.mapInPandas(emit, out_schema)
+            self.spark.createDataFrame(self.chunks, _CHUNK_SCHEMA)
+            .mapInPandas(emit, out_schema)
             .write.mode("overwrite")
             .partitionBy("dst_chunk")
             .parquet(os.path.join(out_dir, "edges"))
@@ -702,13 +686,7 @@ class ChunkedGraph:
         edges = spark.read.parquet(os.path.join(in_dir, "edges")).withColumn(
             "dst_chunk", F.col("dst_chunk").cast("int")
         )
-        chunks = (
-            edges.groupBy("dst_chunk")
-            .applyInPandas(_pack_fn(b, spill_dir, idt), _CHUNK_SCHEMA)
-            .repartition(n_chunks, "chunk_id")
-            .persist()
-        )
-        n_chunk_rows = chunks.count()
+        chunks = _pack_rows(edges.groupBy("dst_chunk"), b, spill_dir, idt)
         return cls(
             spark=spark,
             n_vertices=int(meta["n_vertices"]),
@@ -722,10 +700,11 @@ class ChunkedGraph:
             weighted=bool(meta["weighted"]),
             # a caller-provided spill_dir is not ours to rmtree on unpersist
             owns_spill=owns,
-            build_meta={"load_s": time.time() - t0, "chunk_rows": int(n_chunk_rows)},
+            build_meta={"load_s": time.time() - t0, "chunk_rows": len(chunks)},
         )
 
     def unpersist(self) -> None:
-        self.chunks.unpersist()
+        """Remove the spill dir if this graph owns it; nothing is cached
+        in Spark."""
         if self.owns_spill and self.spill_dir and os.path.isdir(self.spill_dir):
             shutil.rmtree(self.spill_dir, ignore_errors=True)

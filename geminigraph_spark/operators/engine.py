@@ -16,13 +16,16 @@ Re-expresses the reference's two dataflow primitives (core/graph.hpp:
   4-core host, far more than the numpy work of a sub-1M-edge superstep
   (break-even measured at ~1M edges; see the constant). Every other
   superstep — larger work, an explicit ``transport=``, or a non-local
-  master — is one Spark job (a single RDD stage, no shuffle)
-  over the chunk-metadata rows: the per-superstep state reaches workers
-  either as a page-cache-shared state file (local master: zero pickling,
-  the analogue of Gemini's per-node state replicas) or a torrent
-  broadcast (cluster master). Sparse/push supersteps ship ONLY the
-  frontier rows (ids + values, O(|frontier|) bytes) on both transports —
-  the long fixpoint tail costs frontier-sized transport, not |V|.
+  master — is one Spark job (a single RDD stage, no shuffle) over the
+  graph's driver-held chunk list (``ChunkedGraph.chunks``, one
+  ``(chunk_id, begin, end, n_edges, path)`` tuple per chunk — nothing
+  about the graph is collected or cached in Spark): the per-superstep
+  state reaches workers either as a page-cache-shared state file (local
+  master: zero pickling, the analogue of Gemini's per-node state
+  replicas) or a torrent broadcast (cluster master). Sparse/push
+  supersteps ship ONLY the frontier rows (ids + values, O(|frontier|)
+  bytes) on both transports — the long fixpoint tail costs
+  frontier-sized transport, not |V|.
   Dense/pull supersteps: the local transport shares the full vector
   through the page cache (zero-copy); the cluster transport ships each
   chunk only ``msg_vec[chunk_srcs]`` — per-chunk O(srcs-per-chunk),
@@ -36,7 +39,7 @@ Re-expresses the reference's two dataflow primitives (core/graph.hpp:
 
   The superstep is submitted as a plain RDD job rather than a
   DataFrame ``mapInPandas`` (optimization guide §1.2/§4: per-task work
-  and the Python boundary): the metadata rows are a handful of tuples,
+  and the Python boundary): the chunk items are a handful of tuples,
   so Catalyst analysis/optimization and the Arrow record-batch framing
   added ~0.15 s of pure latency to EVERY superstep (measured r7:
   noop-mapInPandas 360 ms vs noop-RDD 270 ms vs 145 ms bare JVM job on
@@ -411,7 +414,6 @@ class VertexEngine:
         self.transport = transport
         self._state_dir: str | None = None  # made by the first file shipment
         self._seq = 0
-        self._chunk_rows_cache = None
         self._usrcs_cache: dict[int, np.ndarray] = {}
         self._usrcs_total_cache: int | None = None
 
@@ -424,21 +426,9 @@ class VertexEngine:
             shutil.rmtree(self._state_dir, ignore_errors=True)
             self._state_dir = None
         self._usrcs_cache = {}
-        self._chunk_rows_cache = None
         self._usrcs_total_cache = None
 
     # ------------------------------------------------ chunk src-set cache
-    def _chunk_rows(self) -> list:
-        """(chunk_id, begin, end, path) rows, collected once (n_chunks
-        metadata rows — the same small-metadata discipline as the
-        boundary array, core/graph.hpp:213)."""
-        if self._chunk_rows_cache is None:
-            rows = self.g.chunks.select("chunk_id", "begin", "end", "path").collect()
-            self._chunk_rows_cache = sorted(
-                (int(r.chunk_id), int(r.begin), int(r.end), r.path) for r in rows
-            )
-        return self._chunk_rows_cache
-
     def _usrcs_of(self, cid: int, path: str) -> np.ndarray:
         """Driver-side copy of a chunk's sorted-unique src set (Σ|usrcs|
         ≤ |E| across chunks — bounded by the edge count, same residency
@@ -456,7 +446,7 @@ class VertexEngine:
             from .chunked_graph import load_chunk_usrcs
 
             self._usrcs_total_cache = sum(
-                len(load_chunk_usrcs(path)) for _, _, _, path in self._chunk_rows()
+                len(load_chunk_usrcs(path)) for *_, path in self.g.chunks
             )
         return self._usrcs_total_cache
 
@@ -472,7 +462,7 @@ class VertexEngine:
         worker tasks re-derive the identical sorted-unique array, so the
         slice indexes line up by construction."""
         payloads, nbytes = {}, 0
-        for cid, begin, end, path in self._chunk_rows():
+        for cid, begin, end, _n, path in self.g.chunks:
             us = self._usrcs_of(cid, path)
             msl = np.ascontiguousarray(msg_vec[us]).tobytes()
             fsl = (
@@ -681,7 +671,7 @@ class VertexEngine:
             items = [
                 (cid, begin, end, path)
                 + (payloads[cid] if payloads is not None else (None, None, None))
-                for cid, begin, end, path in self._chunk_rows()
+                for cid, begin, end, _n, path in g.chunks
             ]
             if in_driver:
                 rows = _run_items(

@@ -294,7 +294,7 @@ def _run(graphs: list) -> int:
         if args.workload == "ppr":
             seeds = np.zeros(g.n_vertices, dtype=bool)
             seeds[:: max(1, args.seed_mod)] = True
-            vals, eng = A.ppr_engine(g, seeds, **kw)
+            vals, eng = A.pagerank_engine(g, teleport=seeds, **kw)
         else:
             vals, eng = A.pagerank_engine(g, **kw)
         col = "rank"

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -13,6 +14,29 @@ def spark():
     s = get_spark("geminigraph-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` in a job group of its own and
+    returns (its result, the number of Spark jobs it submitted)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{next(_job_groups)}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        # the status tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="module")

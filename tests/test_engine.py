@@ -13,7 +13,6 @@ from geminigraph_spark.operators.algorithms import (
     k_core_engine,
     lp_engine,
     pagerank_engine,
-    ppr_engine,
     sssp_engine,
 )
 from geminigraph_spark.operators.chunked_graph import ChunkedGraph
@@ -637,7 +636,7 @@ def test_ppr_engine_matches_oracle_and_df_path(spark, built):
     seeds_mask = np.zeros(n, dtype=bool)
     seeds_mask[::10] = True
     want = O.ppr_ref(src, dst, n, seeds_mask, iters=6)
-    got, eng = ppr_engine(g, seeds_mask, iters=6)
+    got, eng = pagerank_engine(g, iters=6, teleport=seeds_mask)
     assert np.allclose(got, want, atol=1e-12)
     assert all(m.mode == "dense" for m in eng.metrics)  # full frontier
 
@@ -806,7 +805,7 @@ def _run_kernel(name, built, derived):
         return (auth, hub), eng
     out, eng = {
         "pagerank": lambda: pagerank_engine(g, iters=6),
-        "ppr": lambda: ppr_engine(g, seeds, iters=6),
+        "ppr": lambda: pagerank_engine(g, iters=6, teleport=seeds),
         "cc": lambda: cc_engine(sym),
         "lp": lambda: lp_engine(sym, iters=6),
         "sssp": lambda: sssp_engine(wg, root=root),
@@ -898,3 +897,58 @@ def test_single_scan_build_needs_local_master(spark, built, monkeypatch):
     assert np.array_equal(g2.boundaries, g.boundaries)
     assert np.array_equal(g2.in_degree, g.in_degree)
     g2.unpersist()
+
+
+def test_from_arrays_submits_no_job(spark, built, spark_jobs):
+    """Packing an in-memory edge list keeps the chunk list in the
+    driver: no Spark job."""
+    src, dst, w, n, g, sym, wg = built
+    fa, jobs = spark_jobs(lambda: ChunkedGraph.from_arrays(spark, src, dst, n, 5))
+    fa.unpersist()
+    assert jobs == 0
+    assert [c[0] for c in fa.chunks] == list(range(fa.n_chunks))
+    assert sum(c[3] for c in fa.chunks) == fa.n_edges
+
+
+def test_driver_engine_submits_no_job(built, spark_jobs, monkeypatch):
+    """An engine whose supersteps all run in the driver reads the
+    graph's chunk list directly: no Spark job."""
+    from geminigraph_spark.operators import engine as E
+
+    src, dst, w, n, g, sym, wg = built
+    monkeypatch.setattr(E, "DRIVER_MAX_WORK", 1 << 62)
+    (_, eng), jobs = spark_jobs(lambda: pagerank_engine(g, iters=3))
+    eng.close()
+    assert [m.route for m in eng.metrics] == ["driver"] * 3
+    assert jobs == 0
+
+
+def test_build_and_load_cache_nothing(spark, built, tmp_path, monkeypatch):
+    """Neither build path nor load leaves a persisted RDD behind; the
+    chunk list matches the graph and survives a save/load round trip."""
+    from geminigraph_spark.operators import chunked_graph as CG
+
+    src, dst, w, n, g, sym, wg = built
+    df = spark.createDataFrame(
+        [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    shuffled = ChunkedGraph.build(spark, df, n_chunks=5, n_vertices=n)
+    monkeypatch.setattr(CG, "SINGLE_SCAN_MIN_V", 0)
+    scanned = ChunkedGraph.build(spark, df, n_chunks=5, n_vertices=n)
+    shuffled.save(str(tmp_path / "table"))
+    loaded = ChunkedGraph.load(spark, str(tmp_path / "table"))
+    try:
+        assert scanned.build_meta.get("single_scan") is True
+        assert persisted() <= before
+        for graph in (shuffled, scanned, loaded):
+            assert graph.build_meta["chunk_rows"] == len(graph.chunks)
+            assert [c[:4] for c in graph.chunks] == [c[:4] for c in g.chunks]
+            assert sum(c[3] for c in graph.chunks) == graph.n_edges
+    finally:
+        for graph in (shuffled, scanned, loaded):
+            graph.unpersist()

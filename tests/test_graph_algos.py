@@ -968,3 +968,27 @@ def test_triangle_count_releases_its_cache(spark, g):
     rdds = _persistent_rdds(spark)
     assert len(triangle_count(df).collect()) == 1
     assert _persistent_rdds(spark) <= rdds
+
+
+def test_driver_route_probe_fits_a_java_int(spark, g, monkeypatch):
+    """DataFrame.limit takes a Java int: a cap far above 2^31 still
+    routes a tiny call."""
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1 << 62)
+    assert _routes(pagerank, df, iters=2) == {"driver"}
+
+
+@pytest.mark.parametrize(
+    "fn,kw", ROUTED, ids=["pagerank", "pagerank_redistribute", "cc", "lp"]
+)
+def test_driver_route_submits_only_its_probe(spark, g, spark_jobs, monkeypatch, fn, kw):
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    rows = 1_000_000 // (1 if fn is pagerank else 2)
+    _, probe = spark_jobs(
+        lambda: df.select("src", "dst").limit(rows + 1).toArrow()
+    )
+    mets = []
+    _, jobs = spark_jobs(lambda: fn(df, metrics=mets, **kw))
+    assert {m.route for m in mets} == {"driver"}
+    assert 1 <= probe <= 2 and jobs == probe
