@@ -740,10 +740,19 @@ _DETAIL_KEYS = (
 )
 
 
+#: the headline line's size bound in bytes of JSON, as README states
+_HEADLINE_MAX = 4096
+#: headline keys never moved to the detail
+_HEADLINE_CORE = ("metric", "value", "unit", "moved_to_detail")
+
+
 def split_result(result: dict) -> tuple[dict, dict]:
     """(headline, detail): headline keeps metric/value/queries/gteps plus
     a compact per-leg quiet-certification summary (leg_flags); everything
-    bulky moves to detail. The headline must stay ≤ ~4 KB."""
+    bulky moves to detail. The headline stays ≤ _HEADLINE_MAX bytes of
+    JSON: while it is larger, its largest key other than
+    metric/value/unit moves to the detail, and ``moved_to_detail`` in
+    the headline lists the keys moved."""
     detail = {k: result.pop(k) for k in _DETAIL_KEYS if k in result}
     for sect in ("synth",):
         for k in ("pagerank_runs", "cc_runs"):
@@ -760,6 +769,15 @@ def split_result(result: dict) -> tuple[dict, dict]:
         flags[leg] = f
     if flags:
         result["leg_flags"] = flags
+    moved: list[str] = []
+    while len(json.dumps(result)) > _HEADLINE_MAX:
+        rest = [k for k in result if k not in _HEADLINE_CORE]
+        if not rest:
+            break
+        k = max(rest, key=lambda k: len(json.dumps(result[k])))
+        detail[k] = result.pop(k)
+        moved.append(k)
+        result["moved_to_detail"] = moved
     return result, detail
 
 

@@ -34,7 +34,9 @@ supersteps, so only its result (same schema, same labels, ranks within
 owed. A custom hook must see each superstep's frame and a resume or
 warm start begins from a caller's frame: those calls, cluster masters
 and larger graphs keep the DataFrame kernels below. ``triangle_count``
-has no engine kernel.
+takes the same gates and probe (``_driver_edges``) and counts a small
+graph in the driver with a sorted-adjacency numpy kernel
+(``_tc_sorted``) instead of the three-way self-join.
 """
 
 from __future__ import annotations
@@ -237,29 +239,24 @@ def _sym_distinct(src: np.ndarray, dst: np.ndarray):
     return key // n, key % n
 
 
-def _on_driver(edges, checkpoint, metrics, value, derive, run, per_row=1):
-    """The in-driver route of pagerank / connected_components /
-    label_propagation: the same recurrence on the chunked engine, whose
-    supersteps then all run in the driver process. Returns the result
-    frame, or None when the call stays on the DataFrame path.
+def _driver_edges(edges: DataFrame, per_row: int):
+    """The gates and probe shared by the in-driver routes. Returns
+    ``(ids, src, dst)`` with ``src``/``dst`` dense ids into the sorted
+    ``ids``, or None when the call stays on the DataFrame path.
 
-    Taken on a local master (``session.is_local_master``), for a call
-    with the default checkpoint hook, when the input has at most
+    Taken on a local master (``session.is_local_master``) for long,
+    non-null ``src``/``dst`` when the input has at most
     ``engine.DRIVER_MAX_WORK // per_row`` rows: ``per_row`` bounds the
-    engine-graph edges an input row makes (1 for the directed multiset,
-    2 for the symmetrized graphs), so the engine graph fits the cap. The
-    edges are collected through Arrow with a ``limit`` probe of one row
-    more, so a larger input falls through after one job that ships at
-    most that many rows. Ids map to dense ids in sorted order, which
-    keeps min-id labels and smallest-label tie breaks unchanged.
-    ``derive(src, dst)`` gives the engine graph's edges, ``run(graph)``
-    the kernel's (values, engine); label values are mapped back to ids."""
+    driver-side edges an input row makes, so they fit the cap. The edges
+    are collected through Arrow with a ``limit`` probe of one row more,
+    so a larger input falls through after one job that ships at most
+    that many rows. Dense ids keep the order of the ids, so min-id
+    labels, smallest-label tie breaks and (degree, id) ranks are
+    unchanged."""
     from ..operators import engine
-    from ..operators.chunked_graph import ChunkedGraph
     from ..session import is_local_master
 
-    spark = edges.sparkSession
-    if checkpoint is not _default_ckpt or not is_local_master(spark):
+    if not is_local_master(edges.sparkSession):
         return None
     if any(edges.schema[c].dataType != T.LongType() for c in ("src", "dst")):
         return None
@@ -273,8 +270,31 @@ def _on_driver(edges, checkpoint, metrics, value, derive, run, per_row=1):
         np.concatenate([t["src"].to_numpy(), t["dst"].to_numpy()]),
         return_inverse=True,
     )
-    src, dst = derive(dense[:m], dense[m:])
-    g = ChunkedGraph.from_arrays(spark, src, dst, len(ids))
+    return ids, dense[:m], dense[m:]
+
+
+def _on_driver(edges, checkpoint, metrics, value, derive, run, per_row=1):
+    """The in-driver route of pagerank / connected_components /
+    label_propagation: the same recurrence on the chunked engine, whose
+    supersteps then all run in the driver process. Returns the result
+    frame, or None when the call stays on the DataFrame path.
+
+    Taken for a call with the default checkpoint hook whose edges pass
+    ``_driver_edges``; ``per_row`` is the engine-graph edges an input row
+    makes (1 for the directed multiset, 2 for the symmetrized graphs),
+    so the engine graph fits the cap. ``derive(src, dst)`` gives the
+    engine graph's edges, ``run(graph)`` the kernel's (values, engine);
+    label values are mapped back to ids."""
+    from ..operators.chunked_graph import ChunkedGraph
+
+    if checkpoint is not _default_ckpt:
+        return None
+    probe = _driver_edges(edges, per_row)
+    if probe is None:
+        return None
+    ids, src, dst = probe
+    spark = edges.sparkSession
+    g = ChunkedGraph.from_arrays(spark, *derive(src, dst), len(ids))
     eng = None
     try:
         vals, eng = run(g)
@@ -799,19 +819,70 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
+def _tc_sorted(src: np.ndarray, dst: np.ndarray, n: int) -> int:
+    """Triangles among dense ids < ``n`` (SURVEY §2.3 A7) by sorted
+    adjacency: distinct undirected edges without self-loops, oriented
+    from lower to higher (degree, id) rank and sorted into CSR by
+    (lo, hi). Each oriented edge (x, y) makes a wedge (y, z) for every
+    later neighbour z of x, and the triangle closes when y→z is an
+    edge, looked up by ``searchsorted`` on the sorted edge keys.
+
+    Wedges are enumerated in blocks of consecutive edges holding at most
+    max(m, one edge's wedges) of them, so memory stays on the order of
+    the m edges."""
+    a, b = np.minimum(src, dst), np.maximum(src, dst)
+    keep = a != b
+    key = np.unique(a[keep] * n + b[keep])
+    a, b = key // n, key % n
+    deg = np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+    rank = np.empty(n, dtype=np.int64)
+    rank[np.lexsort((np.arange(n), deg))] = np.arange(n)
+    ra, rb = rank[a], rank[b]
+    key = np.sort(np.minimum(ra, rb) * n + np.maximum(ra, rb))
+    m = len(key)
+    if m == 0:
+        return 0
+    lo, hi = key // n, key % n
+    row_end = np.cumsum(np.bincount(lo, minlength=n))
+    wedges = row_end[lo] - 1 - np.arange(m)  # later neighbours of lo
+    ends = np.cumsum(wedges)
+    budget = max(m, int(wedges.max()))
+    total, s = 0, 0
+    while s < m:
+        first = int(ends[s] - wedges[s])  # the block's first wedge
+        e = int(np.searchsorted(ends, first + budget, side="right"))
+        i = np.repeat(np.arange(s, e), wedges[s:e])
+        j = i + 1 + np.arange(first, int(ends[e - 1])) - (ends[i] - wedges[i])
+        q = hi[i] * n + hi[j]
+        pos = np.minimum(np.searchsorted(key, q), m - 1)
+        total += int(np.count_nonzero(key[pos] == q))
+        s = e
+    return total
+
+
 def triangle_count(edges: DataFrame) -> DataFrame:
-    """Global triangle count (1 row: n_triangles long). Counted eagerly,
-    so the oriented edges cached for the three-way self-join are
-    released before the one-row result is returned."""
-    o = _oriented(edges).persist()
-    try:
-        e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-        e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-        e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
-        n = tri.agg(F.count(F.lit(1))).first()[0]
-    finally:
-        o.unpersist()
+    """Global triangle count (1 row: n_triangles long).
+
+    On a local master an input of at most ``engine.DRIVER_MAX_WORK``
+    rows of long, non-null ids (each row gives at most one oriented
+    edge) is collected by ``_driver_edges``' probe and counted in the
+    driver by ``_tc_sorted``. Other calls run the three-way self-join
+    over the oriented edges, counted eagerly so its cache is released
+    before the one-row result is returned."""
+    probe = _driver_edges(edges, per_row=1)
+    if probe is not None:
+        ids, src, dst = probe
+        n = _tc_sorted(src, dst, len(ids))
+    else:
+        o = _oriented(edges).persist()
+        try:
+            e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
+            e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
+            e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
+            tri = e1.join(e2, "y").join(e3, ["x", "z"])
+            n = tri.agg(F.count(F.lit(1))).first()[0]
+        finally:
+            o.unpersist()
     # through Arrow, like _on_driver's result: a frame made from a Python
     # list would run its jobs through Python workers
     return edges.sparkSession.createDataFrame(

@@ -41,9 +41,11 @@ def spark_jobs(spark):
 
 @pytest.fixture(scope="module")
 def dataframe_route():
-    """Keep pagerank / connected_components / label_propagation on their
-    DataFrame kernels: the in-driver route needs an engine graph of at
-    most ``engine.DRIVER_MAX_WORK`` edges, and no graph has fewer than 0."""
+    """Keep pagerank / connected_components / label_propagation and
+    triangle_count on their DataFrame kernels (for triangle_count, the
+    three-way self-join): the in-driver routes need at most
+    ``engine.DRIVER_MAX_WORK`` engine-graph edges or input rows, and no
+    graph has fewer than 0."""
     from geminigraph_spark.operators import engine
 
     with pytest.MonkeyPatch.context() as mp:

@@ -95,3 +95,26 @@ def test_normal_ratchet_far_off_pending_discards_it(benchmod):
     mod._update_floors({"leg": 17.5})  # 17.5 > 12 x 1.25: contrary
     fl, pend = _state(p)
     assert fl["leg"] == 17.5 and pend == {}
+
+
+def test_headline_stays_within_4kb(benchmod):
+    """split_result moves the largest oversize keys to the detail and
+    names them in the headline; a small headline is left whole."""
+    mod, _ = benchmod
+    small = {"metric": "m", "value": 1.0, "unit": "sec", "queries": {"a": 1.0}}
+    head, detail = mod.split_result(dict(small))
+    assert head == small and detail == {}
+    big = dict(
+        small,
+        queries={f"leg_{i}": float(i) for i in range(400)},
+        gteps_synth={f"k{i}": 0.1 for i in range(200)},
+        sf=0.1,
+        lp_supersteps=[1, 2, 3],
+    )
+    head, detail = mod.split_result(big)
+    assert len(json.dumps(head)) <= 4096
+    assert head["moved_to_detail"] == ["queries"]
+    assert detail["queries"] == {f"leg_{i}": float(i) for i in range(400)}
+    assert detail["lp_supersteps"] == [1, 2, 3]
+    assert head["gteps_synth"] == {f"k{i}": 0.1 for i in range(200)}
+    assert (head["metric"], head["value"], head["sf"]) == ("m", 1.0, 0.1)

@@ -118,6 +118,20 @@ def test_broadcast_cap_preserves_results(spark, g, monkeypatch):
     assert np.array_equal(base_lp["label"].values, lp2["label"].values)
 
 
+def _edge_df(spark, src, dst):
+    return spark.createDataFrame(
+        [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
+    )
+
+
+def _hub_skew_edges():
+    """(src, dst, n): one vertex in ~half of all edges."""
+    rng = np.random.default_rng(17)
+    n, m = 400, 4000
+    src = np.where(rng.random(m) < 0.5, 0, rng.integers(0, n, m)).astype(np.int64)
+    return src, rng.integers(1, n, m).astype(np.int64), n
+
+
 def test_triangle_count_hub_skew(spark):
     """VERDICT r3 #7: hub-heavy fixture — one vertex in ~half of all
     edges. Correctness matches the numpy oracle, and the skew evidence is
@@ -128,13 +142,8 @@ def test_triangle_count_hub_skew(spark):
     collapses to a sliver of its degree, so no straggler task dominates."""
     from geminigraph_spark.functions.graph_algos import _oriented
 
-    rng = np.random.default_rng(17)
-    n, m = 400, 4000
-    src = np.where(rng.random(m) < 0.5, 0, rng.integers(0, n, m)).astype(np.int64)
-    dst = rng.integers(1, n, m).astype(np.int64)
-    df = spark.createDataFrame(
-        [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
-    )
+    src, dst, n = _hub_skew_edges()
+    df = _edge_df(spark, src, dst)
     total, per_v = O.tc_ref(src, dst, n)
     assert triangle_count(df).first()["n_triangles"] == total
     o = _oriented(df).toPandas()
@@ -992,3 +1001,97 @@ def test_driver_route_submits_only_its_probe(spark, g, spark_jobs, monkeypatch, 
     _, jobs = spark_jobs(lambda: fn(df, metrics=mets, **kw))
     assert {m.route for m in mets} == {"driver"}
     assert 1 <= probe <= 2 and jobs == probe
+
+
+def _tc(df, monkeypatch):
+    """(schema, count, whether the DataFrame join ran) of triangle_count."""
+    from geminigraph_spark.functions import graph_algos as GA
+
+    joined, oriented = [], GA._oriented
+    with monkeypatch.context() as mp:
+        mp.setattr(GA, "_oriented", lambda e: joined.append(1) or oriented(e))
+        out = triangle_count(df)
+        return out.schema, out.first()["n_triangles"], bool(joined)
+
+
+def _messy_edges():
+    """Self-loops, duplicate and reversed edges, gapped and negative ids:
+    a 4-clique with every edge doubled or reversed, plus a pendant
+    triangle through the most negative id."""
+    v = [-(10**12), -7, 0, 3 * 10**11, 2**62]
+    e = [(v[0], v[1]), (v[1], v[0]), (v[0], v[2]), (v[0], v[2]), (v[2], v[1]),
+         (v[1], v[3]), (v[3], v[0]), (v[0], v[3]), (v[3], v[2]), (v[2], v[3]),
+         (v[1], v[1]), (v[3], v[3]), (v[0], v[4]), (v[4], v[1])]
+    return np.array(e, dtype=np.int64).T
+
+
+@pytest.mark.parametrize("graph", ["messy", "hub_skew", "module", "sparse_ids"])
+def test_triangle_count_driver_route_matches_dataframe(
+    spark, g, sparse_ids, monkeypatch, graph
+):
+    if graph == "module":
+        df = g[3]
+    elif graph == "sparse_ids":
+        df = sparse_ids
+    else:
+        src, dst = _messy_edges() if graph == "messy" else _hub_skew_edges()[:2]
+        df = _edge_df(spark, src, dst)
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    s_drv, n_drv, joined_drv = _tc(df, monkeypatch)
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", -1)
+    s_df, n_df, joined_df = _tc(df, monkeypatch)
+    assert not joined_drv and joined_df
+    assert s_drv == s_df and n_drv == n_df
+    if graph == "messy":
+        assert n_drv == 4 + 1
+
+
+def test_triangle_count_clique_spans_several_wedge_blocks(spark, monkeypatch):
+    """K_k has C(k,3) wedges over C(k,2) oriented edges, and one edge has
+    at most k-2 of them: the kernel enumerates them in ~(k-2)/3 blocks."""
+    from geminigraph_spark.functions.graph_algos import _tc_sorted
+
+    k = 40
+    a, b = np.triu_indices(k, 1)
+    want = k * (k - 1) * (k - 2) // 6
+    assert want > 2 * len(a)  # at least three blocks of ≤ len(a) wedges
+    order = np.random.default_rng(1).permutation(len(a))
+    ids = np.arange(k, dtype=np.int64) * 1_000_003 - 10**9
+    src, dst = ids[b[order]], ids[a[order]]  # reversed, shuffled
+    assert _tc_sorted(b.astype(np.int64), a.astype(np.int64), k) == want
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    assert _tc(_edge_df(spark, src, dst), monkeypatch)[1:] == (want, False)
+
+
+def test_triangle_count_route_gates(spark, g, monkeypatch):
+    """Cluster masters, inputs one row above the cap and non-long or
+    null ids keep the DataFrame join."""
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", len(src))
+    want = O.tc_ref(src, dst, n)[0]
+    assert _tc(df, monkeypatch)[1:] == (want, False)
+    with monkeypatch.context() as mp:
+        mp.setattr("geminigraph_spark.session.is_local_master", lambda _s: False)
+        assert _tc(df, monkeypatch)[1:] == (want, True)
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", len(src) - 1)
+    assert _tc(df, monkeypatch)[1:] == (want, True)
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    as_int = df.select(df.src.cast("int").alias("src"), df.dst.cast("int").alias("dst"))
+    assert _tc(as_int, monkeypatch)[1:] == (want, True)
+    with_null = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, None)], "src long, dst long"
+    )
+    assert _tc(with_null, monkeypatch)[1:] == (1, True)
+
+
+def test_triangle_count_route_submits_only_its_probe(spark, g, spark_jobs, monkeypatch):
+    src, dst, n, df = g
+    monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
+    _, probe = spark_jobs(
+        lambda: df.select("src", "dst").limit(1_000_001).toArrow()
+    )
+    rdds = _persistent_rdds(spark)
+    out, jobs = spark_jobs(lambda: triangle_count(df))
+    assert 1 <= probe <= 2 and jobs == probe
+    assert _persistent_rdds(spark) <= rdds
+    assert out.first()["n_triangles"] == O.tc_ref(src, dst, n)[0]

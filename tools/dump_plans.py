@@ -1,6 +1,12 @@
 """Dump .explain('formatted') for declared queries to plans/r07/.
 
-Usage: python tools/dump_plans.py <before|after> q1 [q2 ...]
+Usage: python tools/dump_plans.py [--out-dir DIR] <before|after> q1 [q2 ...]
+Writes ``<DIR>/<query>_<tag>.txt``; DIR defaults to plans/r07 in this
+checkout. Give a DIR outside the checkout for a before/after check, so
+the committed plan files are not overwritten.
+Besides declared queries: ``pagerank_superstep``, ``cc_superstep`` and
+``lp_superstep`` (first superstep of the DataFrame kernel) and
+``triangle_count_join`` (the DataFrame three-way self-join).
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01), SPARK_GRAFT_CPUS.
 """
 from __future__ import annotations
@@ -12,10 +18,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    args = sys.argv[1:]
+    out_dir = args[1] if args[:1] == ["--out-dir"] else None
+    if out_dir is not None:
+        args = args[2:]
+    tag = args[0]
+    names = args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = os.path.join(
+    out_dir = out_dir or os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
         "r07",
@@ -60,9 +70,33 @@ def main() -> None:
             raise KeyError(kernel)
         return cell["plan"]
 
+    def join_plan() -> str:
+        """The plan of the count over triangle_count's self-join, taken
+        as the kernel collects it, with the in-driver route off."""
+        from geminigraph_spark.functions import graph_algos as GA
+        from geminigraph_spark.functions.edges import events_edges
+        from geminigraph_spark.operators import engine
+
+        e = events_edges(spark, sf_dir)
+        frame, cell = type(e), {}
+        first, cap = frame.first, engine.DRIVER_MAX_WORK
+
+        def capture(df):
+            cell.setdefault("plan", explain_str(df))
+            return first(df)
+
+        frame.first, engine.DRIVER_MAX_WORK = capture, -1
+        try:
+            GA.triangle_count(e)
+        finally:
+            frame.first, engine.DRIVER_MAX_WORK = first, cap
+        return cell["plan"]
+
     qs = entry.queries()
     for name in names:
-        if name.endswith("_superstep"):
+        if name == "triangle_count_join":
+            plan = join_plan()
+        elif name.endswith("_superstep"):
             plan = superstep_plan(name)
         else:
             plan = explain_str(qs[name](spark, sf_dir))
