@@ -43,7 +43,6 @@ from geminigraph_spark.functions.graph_algos import (
     maximal_independent_set,
     neighborhood_function,
     pagerank,
-    personalized_pagerank,
     random_walks,
     sssp,
     triangle_count,
@@ -148,7 +147,7 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .where(F.col("id") % 10 == 0)
     )
-    return _ppm(personalized_pagerank(e, seeds, iters=10), "rank", "rank_ppm")
+    return _ppm(pagerank(e, iters=10, teleport=seeds), "rank", "rank_ppm")
 
 
 def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,10 +246,8 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the deterministic sssp weights (the link
     graph's anchor/position-weighted ranking), ppm-rounded."""
-    from geminigraph_spark.functions.graph_algos import pagerank_weighted
-
     return _ppm(
-        pagerank_weighted(weighted_events_edges(spark, sf_dir), iters=20),
+        pagerank(weighted_events_edges(spark, sf_dir), iters=20, weight="w"),
         "rank",
         "rank_ppm",
     )

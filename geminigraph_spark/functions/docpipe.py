@@ -170,11 +170,18 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _token_vocab(toks: DataFrame) -> DataFrame:
     """(tok, vid) — dense rank in lexicographic token order via the
-    scalable two-pass ranking (plans/encode.assign_dense_ids)."""
+    scalable two-pass ranking (plans/encode.assign_dense_ids).
+
+    Returned as an eager local checkpoint and the ranking's cache is
+    released: the vocabulary's blocks go with the query's frames (the
+    ContextCleaner reaps them), so a query leaves no cached entry."""
     from ..plans.encode import assign_dense_ids
 
     v = assign_dense_ids(toks.select(F.col("tok").alias("url")).distinct())
-    return v.select(F.col("url").alias("tok"), F.col("id").alias("vid"))
+    out = v.select(F.col("url").alias("tok"), F.col("id").alias("vid"))
+    out = out.localCheckpoint(eager=True)
+    v.unpersist()
+    return out
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str, positions: bool = False) -> DataFrame:
@@ -315,7 +322,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    toks = _doc_shingles(spark, sf_dir).persist()
+    # read three times below; a local checkpoint, not a cache entry
+    toks = _doc_shingles(spark, sf_dir).localCheckpoint(eager=True)
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
     tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")

@@ -24,19 +24,20 @@ A faster chunked-numpy engine path for the same kernels lives in
 Small cold calls run on that engine in the driver: ``pagerank``,
 ``connected_components`` and ``label_propagation`` hand the call to
 ``_on_driver`` when the master is local, the checkpoint hook is the
-default one, no ``start``/``prior_labels``/``new_edges`` is given, and
-the engine graph has at most ``engine.DRIVER_MAX_WORK`` edges (counted
-as the input rows for pagerank and twice them for the symmetrized CC
-and LP graphs). A Spark job per superstep costs far more than a small
-graph's numpy work, and such a call observes nothing between
-supersteps, so only its result (same schema, same labels, ranks within
-1e-9) and its per-superstep ``DFIterMetrics`` (``route="driver"``) are
-owed. A custom hook must see each superstep's frame and a resume or
-warm start begins from a caller's frame: those calls, cluster masters
-and larger graphs keep the DataFrame kernels below. ``triangle_count``
-takes the same gates and probe (``_driver_edges``) and counts a small
-graph in the driver with a sorted-adjacency numpy kernel
-(``_tc_sorted``) instead of the three-way self-join.
+default one, no ``start``/``teleport``/``weight``/``prior_labels``/
+``new_edges`` is given, and the engine graph has at most
+``engine.DRIVER_MAX_WORK`` edges (counted as the input rows for
+pagerank and twice them for the symmetrized CC and LP graphs). A Spark
+job per superstep costs far more than a small graph's numpy work, and
+such a call observes nothing between supersteps, so only its result
+(same schema, same labels, ranks within 1e-9) and its per-superstep
+``DFIterMetrics`` (``route="driver"``) are owed. A custom hook must
+see each superstep's frame and a resume or warm start begins from a
+caller's frame: those calls, personalized or weighted PageRank,
+cluster masters and larger graphs keep the DataFrame kernels below.
+``triangle_count`` takes the same gates and probe (``_driver_edges``)
+and counts a small graph in the driver with a sorted-adjacency numpy
+kernel (``_tc_sorted``) instead of the three-way self-join.
 """
 
 from __future__ import annotations
@@ -78,18 +79,14 @@ BROADCAST_FRONTIER_MAX = 4_000_000
 #: iteration. Same bounded-residency discipline as
 #: BROADCAST_FRONTIER_MAX; above the cap the shuffle join stands
 #: (results identical either way).
-BROADCAST_STATE_MAX = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_STATE_MAX", "4000000")
-)
+BROADCAST_STATE_MAX = 4_000_000
 
 
 #: edge-side bound for the scoped AQE-off: AQE's skew-join protection
 #: acts on the EDGE-sized exchanges, so a small-|V|/huge-|E| skewed
 #: graph must keep it even when the state side is tiny. ~50M collapsed
 #: edge rows is where one straggler partition would start to hurt.
-NO_AQE_EDGES_MAX = int(
-    os.environ.get("SPARK_GRAFT_NO_AQE_EDGES_MAX", "50000000")
-)
+NO_AQE_EDGES_MAX = 50_000_000
 
 #: per-shuffle-partition STATE-row target inside the small-graph kernel
 #: scope (guide §2.2: size partitions by data, not by core count): a
@@ -97,9 +94,7 @@ NO_AQE_EDGES_MAX = int(
 #: overhead per exchange. The scope derives the partition count from
 #: |V| / this target (floor 4) and NEVER raises it above the session's
 #: own setting, so large graphs are untouched.
-SMALL_GRAPH_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_SMALL_GRAPH_ROWS_PER_PARTITION", "25000")
-)
+SMALL_GRAPH_ROWS_PER_PARTITION = 25_000
 
 
 @contextmanager
@@ -347,27 +342,45 @@ def pagerank(
     redistribute_dangling: bool = False,
     ckpt_interval: int = 1,
     metrics: list[DFIterMetrics] | None = None,
+    teleport: DataFrame | None = None,
+    weight: str | None = None,
 ) -> DataFrame:
     """Reference PageRank recurrence (toolkits/pagerank.cpp:24-99):
     state pre-divided by out-degree between iterations, final iteration
-    undivided. Returns (id long, rank double).
+    undivided. Each step is r ← (1-d)·tele + d·(Σ_in + dm/|V|), the
+    shape of ``operators.algorithms.pagerank_engine``. Returns
+    (id long, rank double).
 
     Dangling mass: the reference DROPS it (pagerank.cpp:77-97 — sinks
-    receive (1-d) and their accumulated rank leaves the system), and that
-    is the default here so scores match the reference exactly. The
-    textbook power-iteration reading (BASELINE north_star) REDISTRIBUTES
-    it: ``redistribute_dangling=True`` adds Σ_{{outd=0}} rank / |V| to
-    every vertex's incoming sum — one extra aggregate per iteration.
+    receive (1-d)·tele and their accumulated rank leaves the system), and
+    that is the default here (dm = 0) so scores match the reference
+    exactly. The textbook power-iteration reading (BASELINE north_star)
+    REDISTRIBUTES it: ``redistribute_dangling=True`` adds
+    dm = Σ_{{outd=0}} rank to every vertex's incoming sum as dm/|V| — one
+    extra aggregate per iteration.
 
-    ``start``/``start_iter`` resume from a checkpointed state (id, rank).
-    ``ckpt_interval=k`` checkpoints every k-th iteration only (resume
-    replays ≤ k−1); intermediate iterations stay lazy, so the k-th
-    checkpoint runs k chained joins in one job instead of k jobs.
+    ``teleport`` (a frame with column ``id``) makes it personalized
+    PageRank: tele is the seed indicator 1[v∈seeds], joined once into the
+    persisted per-vertex base, and the initial state is the indicator
+    (mass |S|); without it tele is 1 everywhere (mass |V|). ``weight``
+    names an edge-weight column: parallel edges add their weights, and
+    state is pre-divided by each vertex's total OUT-WEIGHT instead of
+    its out-degree (dangling = zero out-weight). ``metrics`` counts
+    edges either way.
 
-    A cold call (no ``start``) with the default checkpoint hook on a
-    small graph runs on the engine in the driver (see ``_on_driver``).
+    ``start``/``start_iter`` resume from a checkpointed state (id, rank)
+    of a call with the same arguments: snapshots hold the pre-divided
+    state except the final iteration's, so a resume is valid only
+    toward the same ``iters``. ``ckpt_interval=k`` checkpoints every
+    k-th iteration only (resume replays ≤ k−1); intermediate iterations
+    stay lazy, so the k-th checkpoint runs k chained joins in one job
+    instead of k jobs.
+
+    A cold uniform call (no ``start``, ``teleport`` or ``weight``) with
+    the default checkpoint hook on a small graph runs on the engine in
+    the driver (see ``_on_driver``).
     """
-    if start is None:
+    if start is None and teleport is None and weight is None:
         from ..operators.algorithms import pagerank_engine
 
         out = _on_driver(
@@ -382,14 +395,27 @@ def pagerank(
     ck = _IntervalCkpt(
         checkpoint, ckpt_interval, lazy_chain=not redistribute_dangling
     )
-    ew = _collapsed(edges).persist()
+    if weight is None:
+        ew = _collapsed(edges).persist()
+    else:
+        ew = edges.groupBy("src", "dst").agg(F.sum(weight).alias("cnt")).persist()
     verts = _vertices_of(edges)
     deg = ew.groupBy(F.col("src").alias("id")).agg(
         F.sum("cnt").cast("double").alias("outd")
     )
-    base = verts.join(deg, "id", "left").fillna(0.0, subset=["outd"]).persist()
+    base = verts.join(deg, "id", "left")
+    if teleport is None:
+        base = base.fillna(0.0, subset=["outd"])
+        tele = F.lit(1.0)
+    else:
+        seeds = teleport.select("id").distinct().withColumn("tele", F.lit(1.0))
+        base = base.join(seeds, "id", "left").fillna({"outd": 0.0, "tele": 0.0})
+        tele = F.col("tele")
+    base = base.persist()
     st = base.agg(F.count(F.lit(1)), F.sum("outd")).first()
     n_verts, n_edges = st[0], int(st[1] or 0)
+    if weight is not None and metrics is not None:
+        n_edges = edges.count()  # the out-degree sum is the weight sum
     # NOTE (r7, measured): broadcast-hinting the state/msgs joins here is
     # a LOSS for this lazy-chain kernel — with ckpt_interval=k the k
     # chained iterations nest 2k BroadcastExchanges, each a separate
@@ -405,8 +431,8 @@ def pagerank(
         else:
             curr = base.select(
                 "id",
-                F.when(F.col("outd") > 0, F.lit(1.0) / F.col("outd"))
-                .otherwise(F.lit(1.0))
+                F.when(F.col("outd") > 0, tele / F.col("outd"))
+                .otherwise(tele)
                 .alias("r"),
             )
             curr = ck.step(-1, curr)
@@ -430,8 +456,8 @@ def pagerank(
                 .agg(F.sum(F.col("r") * F.col("cnt")).alias("s"))
                 .withColumnRenamed("dst", "id")
             )
-            val = F.lit(1.0 - d) + F.lit(d) * (
-                F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / n_verts)
+            val = F.lit(1.0 - d) * tele + F.lit(d) * (
+                F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / max(n_verts, 1))
             )
             if i != iters - 1:
                 r = F.when(F.col("outd") > 0, val / F.col("outd")).otherwise(val)
@@ -607,12 +633,7 @@ def connected_components_warm(
 
     sym = symmetrize_df(edges).distinct().persist()
     verts = _vertices_of(edges)
-    seam = (
-        new_edges.select(F.col("src").alias("id"))
-        .unionByName(new_edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("in_seam", F.lit(True))
-    )
+    seam = _vertices_of(new_edges).withColumn("in_seam", F.lit(True))
     pri = prior_labels.select("id", F.col("label").alias("pl"))
     init = (
         _with_outd(verts, sym)
@@ -697,12 +718,7 @@ def label_propagation(
         pri = prior_labels.select("id", F.col("label").alias("pl"))
         init = init.join(pri, "id", "left")
         if new_edges is not None:
-            seam = (
-                new_edges.select(F.col("src").alias("id"))
-                .unionByName(new_edges.select(F.col("dst").alias("id")))
-                .distinct()
-                .withColumn("in_seam", F.lit(True))
-            )
+            seam = _vertices_of(new_edges).withColumn("in_seam", F.lit(True))
             fro = F.coalesce(F.col("in_seam"), F.lit(False)) | F.col("pl").isNull()
             init = init.join(seam, "id", "left")
         else:
@@ -794,13 +810,7 @@ def _oriented(edges: DataFrame) -> DataFrame:
     """Distinct undirected edges (self-loops dropped) oriented by
     (degree, id) rank low→high — SURVEY §2.3 A7; bounds the skew of the
     heavy self-join (hubs become intersection *targets*, never probes)."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _simple_und(edges)
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -817,6 +827,15 @@ def _oriented(edges: DataFrame) -> DataFrame:
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
     )
+
+
+def _triangles(o: DataFrame) -> DataFrame:
+    """(x, y, z), one row per triangle of the oriented edges ``o``:
+    x→y and y→z closed by x→z."""
+    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
+    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
+    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
+    return e1.join(e2, "y").join(e3, ["x", "z"])
 
 
 def _tc_sorted(src: np.ndarray, dst: np.ndarray, n: int) -> int:
@@ -876,11 +895,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     else:
         o = _oriented(edges).persist()
         try:
-            e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-            e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-            e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-            tri = e1.join(e2, "y").join(e3, ["x", "z"])
-            n = tri.agg(F.count(F.lit(1))).first()[0]
+            n = _triangles(o).agg(F.count(F.lit(1))).first()[0]
         finally:
             o.unpersist()
     # through Arrow, like _on_driver's result: a frame made from a Python
@@ -893,11 +908,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     """(id, n_tri) per vertex (vertices in ≥1 triangle)."""
-    o = _oriented(edges)
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
+    tri = _triangles(_oriented(edges))
     corners = (
         tri.select(F.col("x").alias("id"))
         .unionByName(tri.select(F.col("y").alias("id")))
@@ -1148,79 +1159,6 @@ def bfs_depths(
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 10,
-    d: float = 0.85,
-    checkpoint: Checkpointer = _default_ckpt,
-    start: DataFrame | None = None,
-    start_iter: int = 0,
-    ckpt_interval: int = 1,
-) -> DataFrame:
-    """Personalized PageRank: the reference PageRank recurrence
-    (toolkits/pagerank.cpp:24-99 — pre-divided state, undivided final
-    iteration, dangling mass dropped) with the uniform teleport replaced
-    by a seed indicator: r ← (1-d)·1[v∈seeds] + d·Σ_in. ``seeds`` is a
-    DataFrame with column ``id``; the initial state is the seed indicator
-    (mass |S|, the analogue of PR's all-ones mass |V|). Returns
-    (id long, rank double).
-
-    Scale shape: identical to ``pagerank`` — the seed indicator joins once
-    into the persisted per-vertex base (a |V|-row hash join, broadcast by
-    AQE when |S| is small), then every iteration is the same single
-    join + sum aggregation; the teleport term is a codegen'd CASE, not an
-    extra join. ``start``/``start_iter`` follow pagerank's resume
-    contract (pre-divided snapshots except the final iteration's)."""
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=True)
-    ew = _collapsed(edges).persist()
-    verts = _vertices_of(edges)
-    deg = ew.groupBy(F.col("src").alias("id")).agg(
-        F.sum("cnt").cast("double").alias("outd")
-    )
-    seed_ind = seeds.select("id").distinct().withColumn("tele", F.lit(1.0))
-    base = (
-        verts.join(deg, "id", "left")
-        .join(seed_ind, "id", "left")
-        .fillna({"outd": 0.0, "tele": 0.0})
-        .persist()
-    )
-    n_verts = base.count()
-    # no broadcast hints: lazy-chain kernel, see pagerank's r7 note
-
-    with _small_graph_scope(edges.sparkSession, n_verts, ew.count()):
-        if start is not None:
-            curr = start.select("id", F.col("rank").alias("r"))
-        else:
-            curr = base.select(
-                "id",
-                F.when(F.col("outd") > 0, F.col("tele") / F.col("outd"))
-                .otherwise(F.col("tele"))
-                .alias("r"),
-            )
-            curr = ck.step(-1, curr)
-
-        for i in range(start_iter, iters):
-            msgs = (
-                ew.join(curr.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("cnt")).alias("s"))
-                .withColumnRenamed("dst", "id")
-            )
-            val = F.lit(1.0 - d) * F.col("tele") + F.lit(d) * F.coalesce(
-                F.col("s"), F.lit(0.0)
-            )
-            if i != iters - 1:
-                r = F.when(F.col("outd") > 0, val / F.col("outd")).otherwise(val)
-            else:
-                r = val
-            curr = base.join(msgs, "id", "left").select("id", r.alias("r"))
-            curr = ck.step(i, curr, force=(i == iters - 1))
-
-    ew.unpersist()
-    return curr.select("id", F.col("r").alias("rank"))
-
-
 def k_core(
     edges: DataFrame,
     k: int,
@@ -1244,16 +1182,7 @@ def k_core(
     counts — the same action that materializes the round's LAZY
     localCheckpoint (the interval-∞ lazy_chain=False discipline: one job
     per round, lineage truncated every round)."""
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
+    adj = _simple_adj(edges, True)
     verts = _vertices_of(edges)
     ck = _IntervalCkpt(checkpoint, 10**9, lazy_chain=False)
 
@@ -1370,13 +1299,7 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     is one distinct + one groupBy + two left joins — no new shuffle
     class beyond A7."""
     verts = _vertices_of(edges)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _simple_und(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -1559,54 +1482,6 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_weighted(
-    wedges: DataFrame,
-    iters: int = 20,
-    d: float = 0.85,
-    checkpoint: Checkpointer = _default_ckpt,
-    ckpt_interval: int = 1,
-) -> DataFrame:
-    """Weighted PageRank: r ← (1-d) + d·Σ_in w·r_pre with the reference's
-    state conventions transplanted onto edge weights — state pre-divided
-    by the vertex's total OUT-WEIGHT between iterations, final iteration
-    undivided, zero-out-weight (dangling) mass dropped (pagerank.cpp:24-99
-    shape with w replacing the edge count). On a link graph the weight is
-    typically link-position- or anchor-derived (e.g. 1/(1+link_pos)).
-    wedges: (src, dst, w double); parallel edges add their weights.
-    Returns (id long, rank double)."""
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=True)
-    ew = wedges.groupBy("src", "dst").agg(F.sum("w").alias("w")).persist()
-    verts = _vertices_of(wedges)
-    deg = ew.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("outw"))
-    base = verts.join(deg, "id", "left").fillna(0.0, subset=["outw"]).persist()
-    n_verts = base.count()
-    # no broadcast hints: lazy-chain kernel, see pagerank's r7 note
-    with _small_graph_scope(wedges.sparkSession, n_verts, ew.count()):
-        curr = base.select(
-            "id",
-            F.when(F.col("outw") > 0, F.lit(1.0) / F.col("outw"))
-            .otherwise(F.lit(1.0))
-            .alias("r"),
-        )
-        curr = ck.step(-1, curr)
-        for i in range(iters):
-            msgs = (
-                ew.join(curr.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("w")).alias("s"))
-                .withColumnRenamed("dst", "id")
-            )
-            val = F.lit(1.0 - d) + F.lit(d) * F.coalesce(F.col("s"), F.lit(0.0))
-            if i != iters - 1:
-                r = F.when(F.col("outw") > 0, val / F.col("outw")).otherwise(val)
-            else:
-                r = val
-            curr = base.join(msgs, "id", "left").select("id", r.alias("r"))
-            curr = ck.step(i, curr, force=(i == iters - 1))
-    ew.unpersist()
-    return curr.select("id", F.col("r").alias("rank"))
-
-
 def coreness(
     edges: DataFrame,
     max_iters: int = 200,
@@ -1638,16 +1513,7 @@ def coreness(
     window partition is the usual neighborhood-operator hot spot (AQE
     territory). The changed-count aggregate doubles as the early exit
     and the lazy-localCheckpoint materializer."""
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    ).persist()
+    adj = _simple_adj(edges, True).persist()
     verts = _vertices_of(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     cur = verts.join(deg.withColumnRenamed("v", "id"), "id", "left").select(

@@ -89,11 +89,9 @@ def _id_dtype(n_vertices: int):
 #: |V| ceiling for the single-scan build (each scan task holds two dense
 #: int64 degree arrays — 16 bytes x |V| of transient memory per task;
 #: above this the build falls back to the shuffle path, whose degree
-#: aggregation is O(distinct ids) per task). Env-tunable per deployment:
-#: the cap is about executor memory, not core count.
-BUILD_DENSE_V_MAX = int(
-    os.environ.get("SPARK_GRAFT_BUILD_DENSE_V_MAX", str(16_000_000))
-)
+#: aggregation is O(distinct ids) per task). The cap is about executor
+#: memory, not core count.
+BUILD_DENSE_V_MAX = 16_000_000
 
 #: |V| floor for the single-scan build: on SMALL graphs the build is
 #: job-overhead-bound, and the partitioned parquet bucket write's
@@ -101,10 +99,8 @@ BUILD_DENSE_V_MAX = int(
 #: second scan it saves (measured r7, 198k-vertex / 688k-edge pipeline
 #: graph: single-scan 4.0-4.9 s vs shuffle path 1.7-3.0 s; at 1M
 #: vertices / 30-60M edges the single-scan wins 2-3×). Size-derived,
-#: not core-count-derived; env-tunable per deployment.
-SINGLE_SCAN_MIN_V = int(
-    os.environ.get("SPARK_GRAFT_BUILD_SINGLE_SCAN_MIN_V", str(500_000))
-)
+#: not core-count-derived.
+SINGLE_SCAN_MIN_V = 500_000
 
 
 def _read_block(bucket_dir: str, blk: int, weighted: bool):

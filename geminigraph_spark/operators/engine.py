@@ -86,20 +86,16 @@ SPARSE_DENOM = 20  # push iff active_edges < n_edges / 20 (graph.hpp:1508)
 #: executors share, instead of risking driver OOM / oversized task
 #: binaries — ADVICE r4 medium, the same bounded-residency discipline as
 #: graph_algos.BROADCAST_FRONTIER_MAX)
-SLICED_SHIP_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SLICED_MAX_BYTES", str(256 << 20))
-)
+SLICED_SHIP_MAX_BYTES = 256 << 20
 
 #: target ACTIVE edges per superstep task (guide §2.2): chunks are
 #: grouped into tasks of at least this much work, so a superstep over a
 #: small graph (or a sparse tail frontier) pays the per-task Python
 #: round-trip a handful of times, not n_chunks times. Derived from work,
-#: not core count — the env knob retunes it per deployment.
-_EDGES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_EDGES_PER_TASK", str(4_000_000))
-)
+#: not core count.
+_EDGES_PER_TASK = 4_000_000
 #: lower bound on superstep tasks (mmap/probe parallelism hedge)
-_MIN_TASKS = int(os.environ.get("SPARK_GRAFT_MIN_TASKS", "4"))
+_MIN_TASKS = 4
 
 #: largest superstep ``work`` (the edges a superstep scans, as sized for
 #: its tasks) that runs in the driver process instead of as a Spark job,

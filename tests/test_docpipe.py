@@ -75,3 +75,22 @@ def test_dedup_clusters_invariants(spark):
     by_cluster = clusters.groupby("cluster_id").doc_id.min()
     canon = clusters[clusters.is_canonical == 1]
     assert set(zip(canon.cluster_id, canon.doc_id)) == set(by_cluster.items())
+
+
+def test_doc_queries_leave_no_cache_entry(spark):
+    """The token vocabulary and the shingle table are local checkpoints,
+    not cached frames: running the doc queries leaves the session's
+    CacheManager empty."""
+    from geminigraph_spark.functions import docpipe as D
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    for fn in (
+        D.doc_fingerprint,
+        D.minhash_signatures,
+        D.simhash,
+        D.dedup_simhash,
+        D.dedup_minhash_lsh,
+    ):
+        fn(spark, SF).collect()
+    assert cache.isEmpty()

@@ -631,7 +631,7 @@ def test_sparse_superstep_ships_frontier_bytes_only(spark, built):
 
 def test_ppr_engine_matches_oracle_and_df_path(spark, built):
     src, dst, w, n, g, sym, wg = built
-    from geminigraph_spark.functions.graph_algos import personalized_pagerank
+    from geminigraph_spark.functions.graph_algos import pagerank
 
     seeds_mask = np.zeros(n, dtype=bool)
     seeds_mask[::10] = True
@@ -646,7 +646,7 @@ def test_ppr_engine_matches_oracle_and_df_path(spark, built):
     df = spark.createDataFrame(
         [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
     )
-    p = personalized_pagerank(df, seeds, iters=6).toPandas()
+    p = pagerank(df, iters=6, teleport=seeds).toPandas()
     arr = np.full(n, np.nan)
     arr[p["id"].values] = p["rank"].values
     m = ~np.isnan(arr)

@@ -27,7 +27,6 @@ from geminigraph_spark.functions.graph_algos import (
     neighborhood_function,
     random_walks,
     pagerank,
-    personalized_pagerank,
     sssp,
     triangle_count,
     triangles_per_vertex,
@@ -314,6 +313,30 @@ def test_pagerank_redistributed_matches_reference(spark, g):
     assert not np.allclose(red, drop, atol=1e-9)
 
 
+def test_pagerank_full_teleport_and_unit_weight_are_uniform(spark, g):
+    """Seeding every vertex, or weighting every edge 1.0, runs the same
+    recurrence as uniform PageRank: ranks equal bit for bit. A weighted
+    call's metrics count edges, not the weight sum."""
+    from pyspark.sql import functions as F
+
+    src, dst, n, df = g
+    want = _as_array(pagerank(df, iters=8), "id", "rank", n, np.nan)
+    every = df.select(F.col("src").alias("id")).unionByName(
+        df.select(F.col("dst").alias("id"))
+    )
+    tele = _as_array(pagerank(df, iters=8, teleport=every), "id", "rank", n, np.nan)
+    unit = _as_array(
+        pagerank(df.withColumn("w", F.lit(1.0)), iters=8, weight="w"),
+        "id", "rank", n, np.nan,
+    )
+    assert np.array_equal(tele, want, equal_nan=True)
+    assert np.array_equal(unit, want, equal_nan=True)
+
+    mets = []
+    pagerank(df.withColumn("w", F.lit(0.5)), iters=2, weight="w", metrics=mets)
+    assert [m.active_edges for m in mets] == [len(src)] * 2
+
+
 def test_ckpt_interval_identical_results_and_resume(spark, g):
     """VERDICT r2 #6: ckpt_interval=5 checkpoints every 5th superstep only
     (intermediates stay lazy/persisted) — results match the per-step
@@ -402,7 +425,7 @@ def test_ppr_matches_reference_recurrence(spark, g):
         [(int(v),) for v in np.flatnonzero(seeds_mask)], "id long"
     )
     got = _as_array(
-        personalized_pagerank(df, seeds, iters=6), "id", "rank", n, np.nan
+        pagerank(df, iters=6, teleport=seeds), "id", "rank", n, np.nan
     )
     present = ~np.isnan(got)
     assert np.allclose(got[present], want[present], atol=1e-9)
@@ -782,8 +805,6 @@ def test_local_clustering_matches_direct(spark, g):
 def test_pagerank_weighted_matches_direct(spark, g):
     """Weighted recurrence vs a direct numpy transcription (pre-divided
     by out-weight, undivided final, dangling dropped)."""
-    from geminigraph_spark.functions.graph_algos import pagerank_weighted
-
     src, dst, n, df = g
     w = ((src * 7 + dst * 13) % 100) / 10.0 + 0.1
     wdf = spark.createDataFrame(
@@ -799,7 +820,7 @@ def test_pagerank_weighted_matches_direct(spark, g):
         np.add.at(s, dst, w * r[src])
         val = (1 - d_) + d_ * s
         r = val if i == iters - 1 else np.where(outw > 0, val / np.where(outw > 0, outw, 1.0), val)
-    got = _as_array(pagerank_weighted(wdf, iters=iters), "id", "rank", n, np.nan)
+    got = _as_array(pagerank(wdf, iters=iters, weight="w"), "id", "rank", n, np.nan)
     present = ~np.isnan(got)
     assert np.allclose(got[present], r[present], atol=1e-9)
 
@@ -903,8 +924,10 @@ def test_driver_route_matches_dataframe_route(spark, sparse_ids, monkeypatch, fn
 
 
 def test_driver_route_gates(spark, g, monkeypatch):
-    """Observed or resumed calls, cluster masters and graphs one edge
-    above the constant keep the DataFrame kernels."""
+    """Observed, resumed, personalized or weighted calls, cluster masters
+    and graphs one edge above the constant keep the DataFrame kernels."""
+    from pyspark.sql import functions as F
+
     src, dst, n, df = g
     monkeypatch.setattr(engine, "DRIVER_MAX_WORK", 1_000_000)
     hook = lambda _i, d: d.localCheckpoint(eager=True)  # noqa: E731
@@ -913,6 +936,11 @@ def test_driver_route_gates(spark, g, monkeypatch):
     assert _routes(label_propagation, df, iters=2, checkpoint=hook) == {"dataframe"}
     start = pagerank(df, iters=3)
     assert _routes(pagerank, df, iters=3, start=start, start_iter=2) == {"dataframe"}
+    # personalized and weighted calls stay on the DataFrame kernel
+    seeds = df.select(F.col("src").alias("id"))
+    assert _routes(pagerank, df, iters=2, teleport=seeds) == {"dataframe"}
+    wdf = df.withColumn("w", F.lit(1.0))
+    assert _routes(pagerank, wdf, iters=2, weight="w") == {"dataframe"}
     prior = label_propagation(df, iters=2)
     assert _routes(label_propagation, df, iters=2, prior_labels=prior) == {
         "dataframe"

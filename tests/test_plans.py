@@ -62,7 +62,11 @@ def test_dedup_simhash_plan_is_jvm_and_pruned(spark):
     the documents scan reads only what tokenization needs."""
     from geminigraph_spark.functions.docpipe import dedup_simhash
 
-    plan = _formatted(dedup_simhash(spark, SF))
+    df = dedup_simhash(spark, SF)
+    # its vocabulary is a local checkpoint, not a cached (already run)
+    # subtree: AQE shows codegen ids once the plan has run
+    df.collect()
+    plan = _formatted(df)
     assert "EvalPython" not in plan, plan
     assert "codegen id" in plan, plan
     scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]

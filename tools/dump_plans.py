@@ -4,9 +4,10 @@ Usage: python tools/dump_plans.py [--out-dir DIR] <before|after> q1 [q2 ...]
 Writes ``<DIR>/<query>_<tag>.txt``; DIR defaults to plans/r07 in this
 checkout. Give a DIR outside the checkout for a before/after check, so
 the committed plan files are not overwritten.
-Besides declared queries: ``pagerank_superstep``, ``cc_superstep`` and
-``lp_superstep`` (first superstep of the DataFrame kernel) and
-``triangle_count_join`` (the DataFrame three-way self-join).
+Besides declared queries: ``pagerank_superstep``, ``ppr_superstep``
+(seeds ``id % 10 == 0``), ``pagerank_weighted_superstep``,
+``cc_superstep`` and ``lp_superstep`` (first superstep of the DataFrame
+kernel) and ``triangle_count_join`` (the DataFrame three-way self-join).
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01), SPARK_GRAFT_CPUS.
 """
 from __future__ import annotations
@@ -50,7 +51,11 @@ def main() -> None:
         before materialization) — the final returned plan of an iterative
         kernel is just a checkpoint scan and shows nothing."""
         from geminigraph_spark.functions import graph_algos as GA
-        from geminigraph_spark.functions.edges import events_edges
+        from geminigraph_spark.functions.edges import (
+            events_edges,
+            weighted_events_edges,
+        )
+        from pyspark.sql import functions as F
 
         cell = {}
 
@@ -62,6 +67,12 @@ def main() -> None:
         e = events_edges(spark, sf_dir)
         if kernel == "pagerank_superstep":
             GA.pagerank(e, iters=2, checkpoint=cap)
+        elif kernel == "ppr_superstep":
+            seeds = GA._vertices_of(e).where(F.col("id") % 10 == 0)
+            GA.pagerank(e, iters=2, checkpoint=cap, teleport=seeds)
+        elif kernel == "pagerank_weighted_superstep":
+            w = weighted_events_edges(spark, sf_dir)
+            GA.pagerank(w, iters=2, checkpoint=cap, weight="w")
         elif kernel == "cc_superstep":
             GA.connected_components(e, max_iters=2, checkpoint=cap)
         elif kernel == "lp_superstep":
